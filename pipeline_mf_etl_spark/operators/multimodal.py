@@ -33,6 +33,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.operators.bits import (
+    LSBWriter,
+    MSBReader,
+    MSBWriter,
+    canonical_codes,
+    peek_lut,
+)
+
 N_HIST_BINS = 16
 
 FEATURE_SCHEMA = StructType(
@@ -1475,18 +1483,10 @@ def encode_gif_gray(
             width_bits += 1
     out_codes.append((eoi, width_bits))
 
-    # LSB-first bit packing
-    acc = nbits = 0
-    packed = bytearray()
+    bw = LSBWriter()
     for code, wb in out_codes:
-        acc |= code << nbits
-        nbits += wb
-        while nbits >= 8:
-            packed.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        packed.append(acc & 0xFF)
+        bw.write(code, wb)
+    packed = bw.getvalue()
 
     # 255-byte sub-block framing
     blocks = bytearray()
@@ -2321,17 +2321,12 @@ def _jpeg_dct_matrix() -> np.ndarray:
 _JPEG_D = _jpeg_dct_matrix()
 
 
-def _jpeg_canonical_codes(bits: list[int], values: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length) for a JPEG DHT (bits[i] codes of length i+1)."""
-    codes: dict[int, tuple[int, int]] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            codes[values[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
+def _jpeg_dht_codes(bits: bytes | list[int], values: bytes | list[int]):
+    """(symbol, code, length) for a JPEG DHT: ``bits[i]`` codes of
+    length i+1, assigned to ``values`` in order. Raises ValueError for
+    a table that lists too few values or over-subscribes a length."""
+    lengths = [ln for ln, count in enumerate(bits, 1) for _ in range(count)]
+    return canonical_codes(lengths, values)
 
 
 # Canonical tables the encoder emits in DHT (decoder always reads the
@@ -2347,32 +2342,19 @@ _JPEG_AC_VALUES = [0x00, 0xF0] + [
 _JPEG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPEG_AC_VALUES), 0, 0, 0, 0, 0, 0, 0, 0]
 
 # the encoder's tables never change — build their code dicts once
-_JPEG_DC_CODES = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALUES)
-_JPEG_AC_CODES = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALUES)
+_JPEG_DC_CODES = {
+    s: (c, n) for s, c, n in _jpeg_dht_codes(_JPEG_DC_BITS, _JPEG_DC_VALUES)
+}
+_JPEG_AC_CODES = {
+    s: (c, n) for s, c, n in _jpeg_dht_codes(_JPEG_AC_BITS, _JPEG_AC_VALUES)
+}
 
 
-class _JpegBitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing inside entropy data
-                self.out.append(0x00)
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1s per T.81
-        return bytes(self.out)
+def _jpeg_entropy_bytes(w: MSBWriter) -> bytes:
+    """Finish one entropy-coded segment: pad the last byte with 1s and
+    stuff a 0x00 after every 0xFF (T.81 F.1.2.3)."""
+    w.write((1 << (-w.nbits & 7)) - 1, -w.nbits & 7)
+    return w.getvalue().replace(b"\xff", b"\xff\x00")
 
 
 def _jpeg_category(v: int) -> int:
@@ -2469,11 +2451,11 @@ def encode_jpeg_gray(
         np.frombuffer(gray, dtype=np.uint8).reshape(height, width), q
     )
     dcs, last_all = _jpeg_dc_last(zz_all)
-    # the bit-writer is INLINED (no _JpegBitWriter) on purpose: the
+    # the bit-writer is INLINED (no MSBWriter) on purpose: the
     # per-write method call measured as ~40% of the whole encode, and
     # the block-constant synthesis family emits 2-3 writes per block —
-    # semantics are exactly _JpegBitWriter.write/flush above, kept as
-    # the readable reference implementation. Bits accumulate per block
+    # semantics are exactly MSBWriter.write + _jpeg_entropy_bytes, which
+    # the progressive encoder uses. Bits accumulate per block
     # and drain to bytes (with 0xFF00 stuffing) once per block / once
     # per AC coefficient, so acc stays a small int.
     out = bytearray()
@@ -2573,80 +2555,45 @@ def encode_jpeg_gray(
     )
 
 
-# LUT cache keyed by the raw DHT payload bytes: a corpus decode sees
+# LUT cache keyed by the raw DHT table bytes: a corpus decode sees
 # the same Huffman tables in every payload, and rebuilding the 65536-
 # entry tables per image costs more than the entropy decode itself
-_JPEG_LUT_CACHE: dict[bytes, tuple[list[int], list[int]]] = {}
+_JPEG_LUT_CACHE: dict[bytes, list[int]] = {}
 
 
-def _jpeg_decode_lut(
-    table: dict[tuple[int, int], int], raw_key: bytes
-) -> tuple[list[int], list[int]]:
-    """16-bit-window lookup tables (symbol, code length) for one DHT —
-    the libjpeg fast-decode idiom: every 16-bit bit-window whose prefix
-    is a valid code maps to its symbol, so decoding is one list index
-    instead of a bit-by-bit tree walk. Unused windows carry -1. Cached
-    on the DHT segment bytes (bounded: distinct tables per process)."""
-    hit = _JPEG_LUT_CACHE.get(raw_key)
+def _jpeg_decode_lut(raw: bytes) -> list[int]:
+    """16-bit-window peek LUT (``bits.peek_lut`` packing) for one DHT
+    table — ``raw`` is its class/id byte, 16 length counts and values.
+    The libjpeg fast-decode idiom: decoding is one list index instead
+    of a bit-by-bit tree walk. Cached on the table bytes (bounded:
+    distinct tables per process)."""
+    hit = _JPEG_LUT_CACHE.get(raw)
     if hit is not None:
         return hit
-    sym = np.full(1 << 16, -1, dtype=np.int32)
-    ln = np.zeros(1 << 16, dtype=np.int32)
-    for (length, code), s in table.items():
-        lo = code << (16 - length)
-        hi = (code + 1) << (16 - length)
-        sym[lo:hi] = s
-        ln[lo:hi] = length
-    out = (sym.tolist(), ln.tolist())
+    lut = peek_lut(_jpeg_dht_codes(raw[1:17], raw[17:]), 16, lsb_first=False)
     if len(_JPEG_LUT_CACHE) < 64:
-        _JPEG_LUT_CACHE[raw_key] = out
-    return out
+        _JPEG_LUT_CACHE[raw] = lut
+    return lut
 
 
-class _JpegBitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG entropy stream exhausted mid-symbol")
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        self.nbits -= n
-        v = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def read_symbol(self, lut: tuple[list[int], list[int]]) -> int:
-        # top up to 16 buffered bits (or stream end), peek the window
-        # (right-padded with 1s — the T.81 pad value, so a final symbol
-        # flush against padding still resolves), one LUT probe, consume
-        data, sym_t, len_t = self.data, lut[0], lut[1]
-        while self.nbits < 16 and self.pos < len(data):
-            self.acc = (self.acc << 8) | data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        if self.nbits >= 16:
-            window = (self.acc >> (self.nbits - 16)) & 0xFFFF
-        else:
-            pad = 16 - self.nbits
-            window = ((self.acc << pad) | ((1 << pad) - 1)) & 0xFFFF
-        sym = sym_t[window]
-        length = len_t[window]
-        if sym < 0 or length > self.nbits:
-            raise ValueError(
-                "invalid JPEG Huffman code (no symbol within 16 bits)"
-                if sym < 0
-                else "JPEG entropy stream exhausted mid-symbol"
-            )
-        self.nbits -= length
-        self.acc &= (1 << self.nbits) - 1
-        return sym
+def _jpeg_read_symbol(r: MSBReader, lut: list[int]) -> int:
+    """One Huffman symbol through a 16-bit peek window, right-padded
+    with 1s past the segment end (the T.81 pad value, so a final symbol
+    flushed against padding still resolves)."""
+    window = r.peek(16)
+    nbits = r.nbits  # below 16 only at the end of the segment
+    if nbits < 16:
+        window |= (1 << (16 - nbits)) - 1
+    pk = lut[window]
+    length = pk & 31
+    if not pk or length > nbits:
+        raise ValueError(
+            "invalid JPEG Huffman code (no symbol within 16 bits)"
+            if not pk
+            else "JPEG entropy stream exhausted mid-symbol"
+        )
+    r.read(length)
+    return pk >> 5
 
 
 def _jpeg_extend(bits: int, s: int) -> int:
@@ -2665,25 +2612,21 @@ _JPEG_PROG_AC_VALUES = (
 )
 _JPEG_PROG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_JPEG_PROG_AC_VALUES),
                       0, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_PROG_AC_CODES = _jpeg_canonical_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALUES)
+_JPEG_PROG_AC_CODES = {
+    s: (c, n) for s, c, n in _jpeg_dht_codes(_JPEG_PROG_AC_BITS, _JPEG_PROG_AC_VALUES)
+}
 
 
-class _ProgBitWriter(_JpegBitWriter):
-    """Adds the buffered-EOBRUN flush the progressive AC encoder needs."""
-
-    def __init__(self) -> None:
-        super().__init__()
-        self.eobrun = 0
-
-    def flush_eobrun(self, ac_codes) -> None:
-        if not self.eobrun:
-            return
-        nbits = self.eobrun.bit_length() - 1
+def _jpeg_flush_eobrun(w: MSBWriter, eobrun: int, ac_codes) -> int:
+    """Emit a buffered run of ``eobrun`` end-of-band blocks as one EOBn
+    symbol plus its extra bits (T.81 G.1.2.2); returns the reset run."""
+    if eobrun:
+        nbits = eobrun.bit_length() - 1
         code, length = ac_codes[(nbits << 4) | 0x0]
-        self.write(code, length)
+        w.write(code, length)
         if nbits:
-            self.write(self.eobrun - (1 << nbits), nbits)
-        self.eobrun = 0
+            w.write(eobrun - (1 << nbits), nbits)
+    return 0
 
 
 def encode_jpeg_progressive_gray(
@@ -2724,7 +2667,7 @@ def encode_jpeg_progressive_gray(
     dc_codes, ac_codes = _JPEG_DC_CODES, _JPEG_PROG_AC_CODES
 
     def dc_first(al: int) -> bytes:
-        w = _JpegBitWriter()
+        w = MSBWriter()
         prev = 0
         for bi in range(n_blocks):
             v = int(zz[bi, 0]) >> al  # DC point transform: ARITHMETIC shift
@@ -2735,7 +2678,7 @@ def encode_jpeg_progressive_gray(
             w.write(code, length)
             if s:
                 w.write((diff if diff >= 0 else diff + (1 << s) - 1), s)
-        return w.flush()
+        return _jpeg_entropy_bytes(w)
 
     def dc_refine(al: int) -> bytes:
         # the refinement bit is the TWO'S-COMPLEMENT bit (v >> al) & 1
@@ -2743,13 +2686,14 @@ def encode_jpeg_progressive_gray(
         # convention — for negative DC at al > 0 the sign-magnitude bit
         # would differ (identical at al == 0, the shipped script, but
         # the invariant must not depend on the script)
-        w = _JpegBitWriter()
+        w = MSBWriter()
         for bi in range(n_blocks):
             w.write((int(zz[bi, 0]) >> al) & 1, 1)
-        return w.flush()
+        return _jpeg_entropy_bytes(w)
 
     def ac_first(ss: int, se: int, al: int) -> bytes:
-        w = _ProgBitWriter()
+        w = MSBWriter()
+        eobrun = 0
         # vectorized all-zero-band skip: a block with no magnitude in
         # the band at this precision is exactly one eobrun increment —
         # never pay the 63-step Python loop for it (measured as the
@@ -2757,9 +2701,9 @@ def encode_jpeg_progressive_gray(
         band_any = ((np.abs(zz[:, ss : se + 1]) >> al) != 0).any(axis=1)
         for bi in range(n_blocks):
             if not band_any[bi]:
-                w.eobrun += 1
-                if w.eobrun == 0x7FFF:
-                    w.flush_eobrun(ac_codes)
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
                 continue
             run = 0
             wrote = False
@@ -2769,7 +2713,7 @@ def encode_jpeg_progressive_gray(
                 if m == 0:
                     run += 1
                     continue
-                w.flush_eobrun(ac_codes)
+                eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
                 while run >= 16:
                     code, length = ac_codes[0xF0]
                     w.write(code, length)
@@ -2782,11 +2726,11 @@ def encode_jpeg_progressive_gray(
                 wrote = True
             if run > 0 or not wrote:
                 # block ends in (or is entirely) zeros at this precision
-                w.eobrun += 1
-                if w.eobrun == 0x7FFF:
-                    w.flush_eobrun(ac_codes)
-        w.flush_eobrun(ac_codes)
-        return w.flush()
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
+        _jpeg_flush_eobrun(w, eobrun, ac_codes)
+        return _jpeg_entropy_bytes(w)
 
     def ac_refine(ss: int, se: int, ah: int, al: int) -> bytes:
         """G.1.2.3: newly-significant coefficients (|v|>>Al == 1 with
@@ -2794,12 +2738,14 @@ def encode_jpeg_progressive_gray(
         contribute one correction bit each, buffered and flushed after
         the next emitted symbol (ZRL / run-1 / EOBn) so the decoder
         reads them during that symbol's positional advance."""
-        w = _ProgBitWriter()
+        w = MSBWriter()
+        eobrun = 0
         pending: list[int] = []  # corrections riding the pending EOBRUN
 
         def flush_eob() -> None:
-            if w.eobrun:
-                w.flush_eobrun(ac_codes)
+            nonlocal eobrun
+            if eobrun:
+                eobrun = _jpeg_flush_eobrun(w, eobrun, ac_codes)
                 for b in pending:
                     w.write(b, 1)
                 pending.clear()
@@ -2810,8 +2756,8 @@ def encode_jpeg_progressive_gray(
         band_any = ((np.abs(zz[:, ss : se + 1]) >> al) != 0).any(axis=1)
         for bi in range(n_blocks):
             if not band_any[bi]:
-                w.eobrun += 1
-                if w.eobrun == 0x7FFF:
+                eobrun += 1
+                if eobrun == 0x7FFF:
                     flush_eob()
                 continue
             vals = [int(zz[bi, k]) for k in range(ss, se + 1)]
@@ -2849,12 +2795,12 @@ def encode_jpeg_progressive_gray(
                 bebits.clear()
                 run = 0
             if run > 0 or bebits:
-                w.eobrun += 1
+                eobrun += 1
                 pending.extend(bebits)
-                if w.eobrun == 0x7FFF:
+                if eobrun == 0x7FFF:
                     flush_eob()
         flush_eob()
-        return w.flush()
+        return _jpeg_entropy_bytes(w)
 
     dht_dc = bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALUES)
     dht_ac = (
@@ -3243,11 +3189,11 @@ def _jpeg_decode_progressive(
             if ss == 0 and ah == 0:  # DC first pass needs a DC table
                 if (0, td) not in huff:
                     raise ValueError("JPEG references undefined Huffman table")
-                dc_luts[ci] = _jpeg_decode_lut(*huff[(0, td)])
+                dc_luts[ci] = huff[(0, td)]
             if ss > 0:  # AC scans need an AC table
                 if (1, ta) not in huff:
                     raise ValueError("JPEG references undefined Huffman table")
-                ac_luts[ci] = _jpeg_decode_lut(*huff[(1, ta)])
+                ac_luts[ci] = huff[(1, ta)]
         interleaved = ss == 0 and len(sc) > 1
         if ss == 0:
             n_units = mrows * mcols if interleaved else (
@@ -3291,7 +3237,7 @@ def _jpeg_prog_dc_scan(
 ):
     ss_al, ah = scan["al"], scan["ah"]
     dri = scan["dri"]
-    reader = _JpegBitReader(segments[0])
+    reader = MSBReader(segments[0])
     seg_i = 0
     prev = {ci: 0 for ci in sc}
     if interleaved:
@@ -3300,7 +3246,7 @@ def _jpeg_prog_dc_scan(
             for C in range(mcols):
                 if dri and unit and unit % dri == 0:
                     seg_i += 1
-                    reader = _JpegBitReader(segments[seg_i])
+                    reader = MSBReader(segments[seg_i])
                     prev = {ci: 0 for ci in sc}
                 unit += 1
                 for ci in sc:
@@ -3320,7 +3266,7 @@ def _jpeg_prog_dc_scan(
         for bi in range(n_units):
             if dri and bi and bi % dri == 0:
                 seg_i += 1
-                reader = _JpegBitReader(segments[seg_i])
+                reader = MSBReader(segments[seg_i])
                 prev = {ci: 0}
             padded = (bi // tbw) * grid_w[ci] + (bi % tbw)
             _jpeg_prog_dc_block(
@@ -3333,7 +3279,9 @@ def _jpeg_prog_dc_block(coef, block_idx, reader, dc_lut, prev, ci, ah, al):
         # first pass: Huffman DC difference at precision Al; the
         # predictor chains the POINT-TRANSFORMED values (T.81 G.1.2.1,
         # arithmetic shift on the encode side)
-        s = reader.read_symbol(dc_lut)
+        s = _jpeg_read_symbol(reader, dc_lut)
+        if s > 11:
+            raise ValueError(f"JPEG DC difference category {s} exceeds 11")
         diff = _jpeg_extend(reader.read(s), s) if s else 0
         prev[ci] += diff
         coef[block_idx, 0] = prev[ci] << al
@@ -3351,14 +3299,14 @@ def _jpeg_prog_ac_scan(
     ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
     dri = scan["dri"]
     tbw, tbh, n_units = _jpeg_comp_true_blocks(comps[ci], width, height, hmax, vmax)
-    reader = _JpegBitReader(segments[0])
+    reader = MSBReader(segments[0])
     seg_i = 0
     eobrun = 0
     coef = coefs[ci]
     for bi in range(n_units):
         if dri and bi and bi % dri == 0:
             seg_i += 1
-            reader = _JpegBitReader(segments[seg_i])
+            reader = MSBReader(segments[seg_i])
             eobrun = 0
         block = coef[(bi // tbw) * grid_w[ci] + (bi % tbw)]
         if ah == 0:
@@ -3378,7 +3326,7 @@ def _jpeg_prog_ac_first_block(block, reader, ac_lut, ss, se, al, eobrun):
         return eobrun - 1
     k = ss
     while k <= se:
-        sym = reader.read_symbol(ac_lut)
+        sym = _jpeg_read_symbol(reader, ac_lut)
         r, s = sym >> 4, sym & 0x0F
         if s:
             k += r
@@ -3407,7 +3355,7 @@ def _jpeg_prog_ac_refine_block(block, reader, ac_lut, ss, se, al, eobrun):
     k = ss
     if eobrun == 0:
         while k <= se:
-            sym = reader.read_symbol(ac_lut)
+            sym = _jpeg_read_symbol(reader, ac_lut)
             r, s = sym >> 4, sym & 0x0F
             if s == 0:
                 if r != 15:
@@ -3471,7 +3419,7 @@ def parse_jpeg(payload: bytes) -> dict:
         raise ValueError("not a JPEG payload (no SOI marker)")
     pos = 2
     quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple[dict[tuple[int, int], int], bytes]] = {}
+    huff: dict[tuple[int, int], list[int]] = {}  # (class, id) -> decode LUT
     width = height = None
     comps: list[dict] = []  # SOF order: {cid, h, v, tq, dc, ac}
     scans: list[dict] = []
@@ -3515,19 +3463,10 @@ def parse_jpeg(payload: bytes) -> dict:
         elif marker == 0xC4:  # DHT
             off = 0
             while off < len(seg):
-                tc, th = seg[off] >> 4, seg[off] & 0x0F
-                bits = list(seg[off + 1 : off + 17])
-                n = sum(bits)
-                values = list(seg[off + 17 : off + 17 + n])
-                table: dict[tuple[int, int], int] = {}
-                code, k = 0, 0
-                for length in range(1, 17):
-                    for _ in range(bits[length - 1]):
-                        table[(length, code)] = values[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                huff[(tc, th)] = (table, bytes(seg[off : off + 17 + n]))
+                n = sum(seg[off + 1 : off + 17])
+                huff[(seg[off] >> 4, seg[off] & 0x0F)] = _jpeg_decode_lut(
+                    bytes(seg[off : off + 17 + n])
+                )
                 off += 17 + n
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
             progressive = marker == 0xC2
@@ -3658,25 +3597,20 @@ def parse_jpeg(payload: bytes) -> dict:
         scan["data"], scan["dri"], mrows * mcols
     )
     restart_interval = scan["dri"]
-    dc_tabs = [_jpeg_decode_lut(*scan_huff[(0, c["dc"])]) for c in comps]
-    ac_tabs = [_jpeg_decode_lut(*scan_huff[(1, c["ac"])]) for c in comps]
+    lut_dc_a = [scan_huff[(0, c["dc"])] for c in comps]
+    lut_ac_a = [scan_huff[(1, c["ac"])] for c in comps]
     # per-component plane block grids (MCU-padded)
     grid_w = [mcols * c["h"] for c in comps]
     grid_h = [mrows * c["v"] for c in comps]
     # entropy decode is inherently sequential (DC differences chain
     # block to block WITHIN each component; components interleave per
     # MCU); the DCT math below is vectorized across blocks. The symbol
-    # loop is INLINED (no _JpegBitReader) on purpose: per-symbol method
+    # loop is INLINED (no MSBReader) on purpose: per-symbol method
     # calls measured as ~60% of the whole decode — the semantics are
-    # exactly read_symbol/read/_jpeg_extend above, kept as the readable
-    # reference implementation (and used by the coefficient-level
-    # tests). Block coefficients scatter into PLANE-RASTER order
+    # exactly _jpeg_read_symbol/MSBReader.read/_jpeg_extend, which the
+    # progressive decoder uses. Block coefficients scatter into PLANE-RASTER order
     # directly via the (R*v + r, C*h + c) index, so plane assembly
     # needs no MCU-order permutation afterwards.
-    sym_dc_a = [t[0] for t in dc_tabs]
-    len_dc_a = [t[1] for t in dc_tabs]
-    sym_ac_a = [t[0] for t in ac_tabs]
-    len_ac_a = [t[1] for t in ac_tabs]
     data, n_data = segments[0], len(segments[0])
     seg_i = 0
     acc = nbits = pos = 0
@@ -3699,8 +3633,7 @@ def parse_jpeg(payload: bytes) -> dict:
                 prev = [0] * n_comp
             for ci in range(n_comp):
                 h_i, v_i = comp_hv[ci]
-                sym_dc, len_dc = sym_dc_a[ci], len_dc_a[ci]
-                sym_ac, len_ac = sym_ac_a[ci], len_ac_a[ci]
+                lut_dc, lut_ac = lut_dc_a[ci], lut_ac_a[ci]
                 gw = grid_w[ci]
                 ci_idxs, ci_vals = idxs[ci], vals[ci]
                 prev_dc = prev[ci]
@@ -3719,17 +3652,22 @@ def parse_jpeg(payload: bytes) -> dict:
                         else:
                             pad = 16 - nbits
                             window = ((acc << pad) | ((1 << pad) - 1)) & 0xFFFF
-                        s = sym_dc[window]
-                        length = len_dc[window]
-                        if s < 0 or length > nbits:
+                        pk = lut_dc[window]
+                        length = pk & 31
+                        if not pk or length > nbits:
                             raise ValueError(
                                 "invalid JPEG Huffman code (no symbol within 16 bits)"
-                                if s < 0
+                                if not pk
                                 else "JPEG entropy stream exhausted mid-symbol"
                             )
                         nbits -= length
                         acc &= (1 << nbits) - 1
+                        s = pk >> 5
                         if s:
+                            if s > 11:
+                                raise ValueError(
+                                    f"JPEG DC difference category {s} exceeds 11"
+                                )
                             while nbits < s:
                                 if pos >= n_data:
                                     raise ValueError(
@@ -3757,16 +3695,17 @@ def parse_jpeg(payload: bytes) -> dict:
                             else:
                                 pad = 16 - nbits
                                 window = ((acc << pad) | ((1 << pad) - 1)) & 0xFFFF
-                            sym = sym_ac[window]
-                            length = len_ac[window]
-                            if sym < 0 or length > nbits:
+                            pk = lut_ac[window]
+                            length = pk & 31
+                            if not pk or length > nbits:
                                 raise ValueError(
                                     "invalid JPEG Huffman code (no symbol within 16 bits)"
-                                    if sym < 0
+                                    if not pk
                                     else "JPEG entropy stream exhausted mid-symbol"
                                 )
                             nbits -= length
                             acc &= (1 << nbits) - 1
+                            sym = pk >> 5
                             if sym == 0x00:  # EOB
                                 break
                             if sym == 0xF0:  # ZRL
@@ -4389,19 +4328,19 @@ def encode_mp4_avc1(
     ``sync_samples`` emits the stss box (1-based)."""
     sps_rbsp = encode_h264_sps(**sps_args)
     sps_nal = b"\x67" + _h264_escape(sps_rbsp)
-    p = _H264BitWriter()
-    p.ue(0)
-    p.ue(0)
-    p.u(0, 2)
-    p.ue(0)
-    p.ue(0)
-    p.ue(0)
-    p.u(0, 3)
-    p.se(0)
-    p.se(0)
-    p.se(0)
-    p.u(0, 3)
-    pps_nal = b"\x68" + _h264_escape(p.rbsp_trailing())
+    p = MSBWriter()
+    _ue(p, 0)
+    _ue(p, 0)
+    p.write(0, 2)
+    _ue(p, 0)
+    _ue(p, 0)
+    _ue(p, 0)
+    p.write(0, 3)
+    _se(p, 0)
+    _se(p, 0)
+    _se(p, 0)
+    p.write(0, 3)
+    pps_nal = b"\x68" + _h264_escape(_rbsp_trailing(p))
     avcc = (
         bytes(
             [
@@ -5254,71 +5193,34 @@ H264_SLICE_BYTES = 32  # synthesis: one slice NAL per 32 document bytes
 _H264_SLICE_MARKER = b"\x00\x00\x01"
 
 
-class _H264BitWriter:
-    """MSB-first bit writer with unsigned/signed exp-Golomb (ue/se)."""
-
-    def __init__(self) -> None:
-        self._bits: list[int] = []
-
-    def u(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self._bits.append((value >> i) & 1)
-
-    def ue(self, value: int) -> None:
-        if value < 0:
-            raise ValueError(f"ue(v) needs a non-negative value, got {value}")
-        code = value + 1
-        n = code.bit_length()
-        self.u(0, n - 1)
-        self.u(code, n)
-
-    def se(self, value: int) -> None:
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def rbsp_trailing(self) -> bytes:
-        self._bits.append(1)  # rbsp_stop_one_bit
-        while len(self._bits) % 8:
-            self._bits.append(0)
-        out = bytearray()
-        for i in range(0, len(self._bits), 8):
-            b = 0
-            for bit in self._bits[i : i + 8]:
-                b = (b << 1) | bit
-            out.append(b)
-        return bytes(out)
+def _ue(w: MSBWriter, value: int) -> None:
+    """Unsigned exp-Golomb ue(v): n-1 zero bits, then value+1 in n bits."""
+    if value < 0:
+        raise ValueError(f"ue(v) needs a non-negative value, got {value}")
+    w.write(value + 1, 2 * (value + 1).bit_length() - 1)
 
 
-class _H264BitReader:
-    """MSB-first bit reader with ue/se decode; fails loudly on overrun."""
+def _se(w: MSBWriter, value: int) -> None:
+    _ue(w, 2 * value - 1 if value > 0 else -2 * value)
 
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0
 
-    def bit(self) -> int:
-        byte, off = divmod(self._pos, 8)
-        if byte >= len(self._data):
-            raise ValueError("H.264 RBSP exhausted mid-field")
-        self._pos += 1
-        return (self._data[byte] >> (7 - off)) & 1
+def _rbsp_trailing(w: MSBWriter) -> bytes:
+    w.write(1, 1)  # rbsp_stop_one_bit, then zero bits to the byte
+    return w.getvalue()
 
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
 
-    def ue(self) -> int:
-        zeros = 0
-        while self.bit() == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("exp-Golomb prefix over 31 zeros (corrupt)")
-        return ((1 << zeros) | self.u(zeros)) - 1
+def _read_ue(r: MSBReader) -> int:
+    zeros = 0
+    while r.read(1) == 0:
+        zeros += 1
+        if zeros > 31:
+            raise ValueError("exp-Golomb prefix over 31 zeros (corrupt)")
+    return ((1 << zeros) | r.read(zeros)) - 1
 
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
+
+def _read_se(r: MSBReader) -> int:
+    k = _read_ue(r)
+    return (k + 1) // 2 if k % 2 else -(k // 2)
 
 
 def _h264_escape(rbsp: bytes) -> bytes:
@@ -5381,30 +5283,30 @@ def encode_h264_sps(
             f"high-profile SPS (profile_idc {profile_idc}) carries "
             "chroma/scaling fields this encoder does not emit"
         )
-    w = _H264BitWriter()
-    w.u(profile_idc, 8)
-    w.u(0, 8)  # constraint_set flags + reserved
-    w.u(level_idc, 8)
-    w.ue(0)  # seq_parameter_set_id
-    w.ue(4)  # log2_max_frame_num_minus4
-    w.ue(0)  # pic_order_cnt_type
-    w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.ue(1)  # max_num_ref_frames
-    w.u(0, 1)  # gaps_in_frame_num_value_allowed_flag
-    w.ue(width_mbs - 1)  # pic_width_in_mbs_minus1
-    w.ue(height_mbs - 1)  # pic_height_in_map_units_minus1
-    w.u(1, 1)  # frame_mbs_only_flag
-    w.u(1, 1)  # direct_8x8_inference_flag
+    w = MSBWriter()
+    w.write(profile_idc, 8)
+    w.write(0, 8)  # constraint_set flags + reserved
+    w.write(level_idc, 8)
+    _ue(w, 0)  # seq_parameter_set_id
+    _ue(w, 4)  # log2_max_frame_num_minus4
+    _ue(w, 0)  # pic_order_cnt_type
+    _ue(w, 4)  # log2_max_pic_order_cnt_lsb_minus4
+    _ue(w, 1)  # max_num_ref_frames
+    w.write(0, 1)  # gaps_in_frame_num_value_allowed_flag
+    _ue(w, width_mbs - 1)  # pic_width_in_mbs_minus1
+    _ue(w, height_mbs - 1)  # pic_height_in_map_units_minus1
+    w.write(1, 1)  # frame_mbs_only_flag
+    w.write(1, 1)  # direct_8x8_inference_flag
     if crop_right or crop_bottom:
-        w.u(1, 1)  # frame_cropping_flag
-        w.ue(0)
-        w.ue(crop_right)
-        w.ue(0)
-        w.ue(crop_bottom)
+        w.write(1, 1)  # frame_cropping_flag
+        _ue(w, 0)
+        _ue(w, crop_right)
+        _ue(w, 0)
+        _ue(w, crop_bottom)
     else:
-        w.u(0, 1)
-    w.u(0, 1)  # vui_parameters_present_flag
-    return w.rbsp_trailing()
+        w.write(0, 1)
+    w.write(0, 1)  # vui_parameters_present_flag
+    return _rbsp_trailing(w)
 
 
 def parse_h264_sps(rbsp: bytes) -> dict:
@@ -5413,39 +5315,39 @@ def parse_h264_sps(rbsp: bytes) -> dict:
     POC/ref fields walked so the geometry fields land at the right bit
     offsets. Fails loudly on high-profile chroma fields and on
     truncated streams — never guesses."""
-    r = _H264BitReader(rbsp)
-    profile_idc = r.u(8)
-    r.u(8)  # constraint flags
-    level_idc = r.u(8)
-    r.ue()  # seq_parameter_set_id
+    r = MSBReader(rbsp)
+    profile_idc = r.read(8)
+    r.read(8)  # constraint flags
+    level_idc = r.read(8)
+    _read_ue(r)  # seq_parameter_set_id
     if profile_idc in (100, 110, 122, 244, 44, 83, 86, 118, 128):
         raise NotImplementedError(
             f"high-profile SPS (profile_idc {profile_idc}: chroma format / "
             "scaling matrices) not supported by this probe"
         )
-    r.ue()  # log2_max_frame_num_minus4
-    poc_type = r.ue()
+    _read_ue(r)  # log2_max_frame_num_minus4
+    poc_type = _read_ue(r)
     if poc_type == 0:
-        r.ue()  # log2_max_pic_order_cnt_lsb_minus4
+        _read_ue(r)  # log2_max_pic_order_cnt_lsb_minus4
     elif poc_type == 1:
-        r.u(1)
-        r.se()
-        r.se()
-        for _ in range(r.ue()):
-            r.se()
+        r.read(1)
+        _read_se(r)
+        _read_se(r)
+        for _ in range(_read_ue(r)):
+            _read_se(r)
     elif poc_type != 2:
         raise ValueError(f"impossible pic_order_cnt_type {poc_type}")
-    r.ue()  # max_num_ref_frames
-    r.u(1)  # gaps_in_frame_num_value_allowed_flag
-    width_mbs = r.ue() + 1
-    height_map_units = r.ue() + 1
-    frame_mbs_only = r.u(1)
+    _read_ue(r)  # max_num_ref_frames
+    r.read(1)  # gaps_in_frame_num_value_allowed_flag
+    width_mbs = _read_ue(r) + 1
+    height_map_units = _read_ue(r) + 1
+    frame_mbs_only = r.read(1)
     if not frame_mbs_only:
-        r.u(1)  # mb_adaptive_frame_field_flag
-    r.u(1)  # direct_8x8_inference_flag
+        r.read(1)  # mb_adaptive_frame_field_flag
+    r.read(1)  # direct_8x8_inference_flag
     crop = (0, 0, 0, 0)
-    if r.u(1):  # frame_cropping_flag
-        crop = (r.ue(), r.ue(), r.ue(), r.ue())
+    if r.read(1):  # frame_cropping_flag
+        crop = (_read_ue(r), _read_ue(r), _read_ue(r), _read_ue(r))
     # CropUnitX = 2 (4:2:0); CropUnitY = 2 * (2 - frame_mbs_only_flag)
     crop_y_unit = 2 * (2 - frame_mbs_only)
     height_mbs = height_map_units * (2 - frame_mbs_only)
@@ -5481,21 +5383,21 @@ def encode_h264_annexb(
             profile_idc, level_idc, width_mbs, height_mbs, crop_right, crop_bottom
         )
     )
-    p = _H264BitWriter()
-    p.ue(0)  # pic_parameter_set_id
-    p.ue(0)  # seq_parameter_set_id
-    p.u(0, 1)  # entropy_coding_mode_flag (CAVLC)
-    p.u(0, 1)  # bottom_field_pic_order_in_frame_present_flag
-    p.ue(0)  # num_slice_groups_minus1
-    p.ue(0)  # num_ref_idx_l0_default_active_minus1
-    p.ue(0)  # num_ref_idx_l1_default_active_minus1
-    p.u(0, 1)  # weighted_pred_flag
-    p.u(0, 2)  # weighted_bipred_idc
-    p.se(0)  # pic_init_qp_minus26
-    p.se(0)  # pic_init_qs_minus26
-    p.se(0)  # chroma_qp_index_offset
-    p.u(0, 3)  # deblocking/constrained-intra/redundant-pic flags
-    pps = _h264_escape(p.rbsp_trailing())
+    p = MSBWriter()
+    _ue(p, 0)  # pic_parameter_set_id
+    _ue(p, 0)  # seq_parameter_set_id
+    p.write(0, 1)  # entropy_coding_mode_flag (CAVLC)
+    p.write(0, 1)  # bottom_field_pic_order_in_frame_present_flag
+    _ue(p, 0)  # num_slice_groups_minus1
+    _ue(p, 0)  # num_ref_idx_l0_default_active_minus1
+    _ue(p, 0)  # num_ref_idx_l1_default_active_minus1
+    p.write(0, 1)  # weighted_pred_flag
+    p.write(0, 2)  # weighted_bipred_idc
+    _se(p, 0)  # pic_init_qp_minus26
+    _se(p, 0)  # pic_init_qs_minus26
+    _se(p, 0)  # chroma_qp_index_offset
+    p.write(0, 3)  # deblocking/constrained-intra/redundant-pic flags
+    pps = _h264_escape(_rbsp_trailing(p))
     out = bytearray()
     out += b"\x00\x00\x00\x01\x67" + sps  # SPS: nal_ref_idc 3, type 7
     out += b"\x00\x00\x00\x01\x68" + pps  # PPS: type 8
@@ -5930,55 +5832,55 @@ def encode_hevc_sps(
     RBSP: profile_tier_level with the 43 reserved bits, 4:2:0 chroma,
     geometry in luma samples, conformance window in chroma units.
     Returns the UNescaped RBSP."""
-    w = _H264BitWriter()
-    w.u(0, 4)  # sps_video_parameter_set_id
-    w.u(0, 3)  # sps_max_sub_layers_minus1
-    w.u(1, 1)  # sps_temporal_id_nesting_flag
+    w = MSBWriter()
+    w.write(0, 4)  # sps_video_parameter_set_id
+    w.write(0, 3)  # sps_max_sub_layers_minus1
+    w.write(1, 1)  # sps_temporal_id_nesting_flag
     # profile_tier_level(1, 0)
-    w.u(0, 2)  # general_profile_space
-    w.u(tier, 1)  # general_tier_flag
-    w.u(profile_idc, 5)  # general_profile_idc
-    w.u(1 << (31 - profile_idc), 32)  # compatibility flags (own bit set)
-    w.u(0b1000, 4)  # progressive=1, interlaced/non-packed/frame-only=0
-    w.u(0, 43)  # general_reserved_zero_43bits
-    w.u(0, 1)  # general_inbld_flag (reserved)
-    w.u(level_idc, 8)  # general_level_idc
-    w.ue(0)  # sps_seq_parameter_set_id
-    w.ue(1)  # chroma_format_idc (4:2:0)
-    w.ue(pic_width)  # pic_width_in_luma_samples
-    w.ue(pic_height)  # pic_height_in_luma_samples
+    w.write(0, 2)  # general_profile_space
+    w.write(tier, 1)  # general_tier_flag
+    w.write(profile_idc, 5)  # general_profile_idc
+    w.write(1 << (31 - profile_idc), 32)  # compatibility flags (own bit set)
+    w.write(0b1000, 4)  # progressive=1, interlaced/non-packed/frame-only=0
+    w.write(0, 43)  # general_reserved_zero_43bits
+    w.write(0, 1)  # general_inbld_flag (reserved)
+    w.write(level_idc, 8)  # general_level_idc
+    _ue(w, 0)  # sps_seq_parameter_set_id
+    _ue(w, 1)  # chroma_format_idc (4:2:0)
+    _ue(w, pic_width)  # pic_width_in_luma_samples
+    _ue(w, pic_height)  # pic_height_in_luma_samples
     if conf_right or conf_bottom:
-        w.u(1, 1)  # conformance_window_flag
-        w.ue(0)
-        w.ue(conf_right)
-        w.ue(0)
-        w.ue(conf_bottom)
+        w.write(1, 1)  # conformance_window_flag
+        _ue(w, 0)
+        _ue(w, conf_right)
+        _ue(w, 0)
+        _ue(w, conf_bottom)
     else:
-        w.u(0, 1)
-    w.ue(0)  # bit_depth_luma_minus8
-    w.ue(0)  # bit_depth_chroma_minus8
-    w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
-    w.u(0, 1)  # sps_sub_layer_ordering_info_present_flag
-    w.ue(1)  # sps_max_dec_pic_buffering_minus1
-    w.ue(0)  # sps_max_num_reorder_pics
-    w.ue(0)  # sps_max_latency_increase_plus1
-    w.ue(0)  # log2_min_luma_coding_block_size_minus3
-    w.ue(2)  # log2_diff_max_min_luma_coding_block_size
-    w.ue(0)  # log2_min_luma_transform_block_size_minus2
-    w.ue(3)  # log2_diff_max_min_luma_transform_block_size
-    w.ue(0)  # max_transform_hierarchy_depth_inter
-    w.ue(0)  # max_transform_hierarchy_depth_intra
-    w.u(0, 1)  # scaling_list_enabled_flag
-    w.u(0, 1)  # amp_enabled_flag
-    w.u(0, 1)  # sample_adaptive_offset_enabled_flag
-    w.u(0, 1)  # pcm_enabled_flag
-    w.ue(0)  # num_short_term_ref_pic_sets
-    w.u(0, 1)  # long_term_ref_pics_present_flag
-    w.u(0, 1)  # sps_temporal_mvp_enabled_flag
-    w.u(0, 1)  # strong_intra_smoothing_enabled_flag
-    w.u(0, 1)  # vui_parameters_present_flag
-    w.u(0, 1)  # sps_extension_present_flag
-    return w.rbsp_trailing()
+        w.write(0, 1)
+    _ue(w, 0)  # bit_depth_luma_minus8
+    _ue(w, 0)  # bit_depth_chroma_minus8
+    _ue(w, 4)  # log2_max_pic_order_cnt_lsb_minus4
+    w.write(0, 1)  # sps_sub_layer_ordering_info_present_flag
+    _ue(w, 1)  # sps_max_dec_pic_buffering_minus1
+    _ue(w, 0)  # sps_max_num_reorder_pics
+    _ue(w, 0)  # sps_max_latency_increase_plus1
+    _ue(w, 0)  # log2_min_luma_coding_block_size_minus3
+    _ue(w, 2)  # log2_diff_max_min_luma_coding_block_size
+    _ue(w, 0)  # log2_min_luma_transform_block_size_minus2
+    _ue(w, 3)  # log2_diff_max_min_luma_transform_block_size
+    _ue(w, 0)  # max_transform_hierarchy_depth_inter
+    _ue(w, 0)  # max_transform_hierarchy_depth_intra
+    w.write(0, 1)  # scaling_list_enabled_flag
+    w.write(0, 1)  # amp_enabled_flag
+    w.write(0, 1)  # sample_adaptive_offset_enabled_flag
+    w.write(0, 1)  # pcm_enabled_flag
+    _ue(w, 0)  # num_short_term_ref_pic_sets
+    w.write(0, 1)  # long_term_ref_pics_present_flag
+    w.write(0, 1)  # sps_temporal_mvp_enabled_flag
+    w.write(0, 1)  # strong_intra_smoothing_enabled_flag
+    w.write(0, 1)  # vui_parameters_present_flag
+    w.write(0, 1)  # sps_extension_present_flag
+    return _rbsp_trailing(w)
 
 
 def parse_hevc_sps(rbsp: bytes) -> dict:
@@ -5988,41 +5890,41 @@ def parse_hevc_sps(rbsp: bytes) -> dict:
     offsets, SubWidthC/SubHeightC = 2 for 4:2:0). Fails loudly on
     multi-layer streams, profile space != 0, or chroma formats whose
     window units this probe does not model — never guesses."""
-    r = _H264BitReader(rbsp)
-    r.u(4)  # sps_video_parameter_set_id
-    max_sub_layers = r.u(3)
+    r = MSBReader(rbsp)
+    r.read(4)  # sps_video_parameter_set_id
+    max_sub_layers = r.read(3)
     if max_sub_layers:
         raise NotImplementedError(
             f"{max_sub_layers + 1}-sub-layer HEVC SPS (per-layer "
             "profile_tier_level) not supported by this probe"
         )
-    r.u(1)  # temporal_id_nesting
-    profile_space = r.u(2)
+    r.read(1)  # temporal_id_nesting
+    profile_space = r.read(2)
     if profile_space:
         raise ValueError(f"general_profile_space {profile_space} (must be 0)")
-    tier = r.u(1)
-    profile_idc = r.u(5)
-    r.u(32)  # compatibility flags
-    r.u(4)  # progressive/interlaced/non-packed/frame-only
-    if r.u(43):
+    tier = r.read(1)
+    profile_idc = r.read(5)
+    r.read(32)  # compatibility flags
+    r.read(4)  # progressive/interlaced/non-packed/frame-only
+    if r.read(43):
         raise ValueError("general_reserved_zero_43bits set (corrupt PTL)")
-    r.u(1)  # inbld/reserved
-    level_idc = r.u(8)
-    r.ue()  # sps_seq_parameter_set_id
-    chroma = r.ue()
+    r.read(1)  # inbld/reserved
+    level_idc = r.read(8)
+    _read_ue(r)  # sps_seq_parameter_set_id
+    chroma = _read_ue(r)
     if chroma == 3:
-        r.u(1)  # separate_colour_plane_flag
+        r.read(1)  # separate_colour_plane_flag
     if chroma not in (1, 2, 3):
         raise NotImplementedError(
             f"chroma_format_idc {chroma} (monochrome) window units not modeled"
         )
     sub_w = 2 if chroma in (1, 2) else 1
     sub_h = 2 if chroma == 1 else 1
-    pic_w = r.ue()
-    pic_h = r.ue()
+    pic_w = _read_ue(r)
+    pic_h = _read_ue(r)
     crop = (0, 0, 0, 0)
-    if r.u(1):  # conformance_window_flag
-        crop = (r.ue(), r.ue(), r.ue(), r.ue())
+    if r.read(1):  # conformance_window_flag
+        crop = (_read_ue(r), _read_ue(r), _read_ue(r), _read_ue(r))
     width = pic_w - sub_w * (crop[0] + crop[1])
     height = pic_h - sub_h * (crop[2] + crop[3])
     if width <= 0 or height <= 0:
@@ -6061,18 +5963,18 @@ def encode_mp4_hevc(
     sps_rbsp = encode_hevc_sps(**sps_args)
     sps_nal = _hevc_nal(HEVC_NAL_SPS, _h264_escape(sps_rbsp))
     # minimal PPS: ids + a run of zero flags/ue's per §7.3.2.3
-    p = _H264BitWriter()
-    p.ue(0)  # pps_pic_parameter_set_id
-    p.ue(0)  # pps_seq_parameter_set_id
-    p.u(0, 7)  # dependent/output/extra-bits/sign-hiding/cabac-present...
-    p.ue(0)  # num_ref_idx_l0_default_active_minus1
-    p.ue(0)  # num_ref_idx_l1_default_active_minus1
-    p.se(0)  # init_qp_minus26
-    p.u(0, 3)
-    p.se(0)  # pps_cb_qp_offset
-    p.se(0)  # pps_cr_qp_offset
-    p.u(0, 8)  # remaining single-bit flags through the extension flag
-    pps_nal = _hevc_nal(HEVC_NAL_PPS, _h264_escape(p.rbsp_trailing()))
+    p = MSBWriter()
+    _ue(p, 0)  # pps_pic_parameter_set_id
+    _ue(p, 0)  # pps_seq_parameter_set_id
+    p.write(0, 7)  # dependent/output/extra-bits/sign-hiding/cabac-present...
+    _ue(p, 0)  # num_ref_idx_l0_default_active_minus1
+    _ue(p, 0)  # num_ref_idx_l1_default_active_minus1
+    _se(p, 0)  # init_qp_minus26
+    p.write(0, 3)
+    _se(p, 0)  # pps_cb_qp_offset
+    _se(p, 0)  # pps_cr_qp_offset
+    p.write(0, 8)  # remaining single-bit flags through the extension flag
+    pps_nal = _hevc_nal(HEVC_NAL_PPS, _h264_escape(_rbsp_trailing(p)))
     v = parse_hevc_sps(sps_rbsp)
     ptl = (
         bytes([(v["tier"] << 5) | v["profile_idc"]])  # space 0 + tier + profile

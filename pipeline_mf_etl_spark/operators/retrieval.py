@@ -50,18 +50,6 @@ BM25_B = 0.75
 _LAZY_POSTINGS_CACHE: list[DataFrame] = []
 
 
-def build_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Inverted-index postings: one row per (doc, term) with the term
-    frequency and the doc's token length. The corpus is exploded and
-    shuffled ONCE (the tf groupBy); doc length re-aggregates from tf
-    (dl = Σ tf — already doc-partitioned, far smaller than the token
-    stream), so a second tokenize pass never runs."""
-    tok = docs.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
-    tf = tok.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    return tf.join(dl, id_col)
-
-
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,

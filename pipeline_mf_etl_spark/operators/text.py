@@ -40,20 +40,6 @@ def token_count(toks: Column) -> Column:
     return F.size(toks)
 
 
-def bpe_ish_piece_count(text: Column) -> Column:
-    """BPE-ish sub-token proxy: word chunks of <=4 chars + digits +
-    punctuation marks each count as one piece."""
-    return F.size(
-        F.filter(
-            F.split(
-                F.regexp_replace(F.lower(text), r"([a-z]{1,4}|[0-9]+|[^a-z0-9\s])", "$1\x1f"),
-                "\x1f",
-            ),
-            lambda t: F.trim(t) != "",
-        )
-    )
-
-
 def punct_ratio(text: Column) -> Column:
     """Punctuation chars / total chars."""
     n = F.length(text)

@@ -28,96 +28,36 @@ from __future__ import annotations
 
 import numpy as np
 
-
-# ---------------------------------------------------------------------------
-# LSB-first bit IO (VP8L packs bits little-endian within bytes)
-# ---------------------------------------------------------------------------
-
-
-class BitWriter:
-    def __init__(self) -> None:
-        self._bits = 0
-        self._n = 0
-        self._out = bytearray()
-
-    def write(self, value: int, nbits: int) -> None:
-        if value < 0 or (nbits < 32 and value >> nbits):
-            raise ValueError(f"value {value} does not fit in {nbits} bits")
-        self._bits |= value << self._n
-        self._n += nbits
-        while self._n >= 8:
-            self._out.append(self._bits & 0xFF)
-            self._bits >>= 8
-            self._n -= 8
-
-    def write_code(self, code: int, nbits: int) -> None:
-        """Emit a prefix code: VP8L reads codes bit-by-bit building
-        code = (code << 1) | next_bit, so the MSB of the code goes into
-        the stream FIRST (bit-reversed relative to plain write())."""
-        for i in range(nbits - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def getvalue(self) -> bytes:
-        out = bytes(self._out)
-        if self._n:
-            out += bytes([self._bits & 0xFF])
-        return out
-
-
-class BitReader:
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0  # bit position
-        self._nbits = len(data) * 8
-
-    def read(self, nbits: int) -> int:
-        p = self._pos
-        end = p + nbits
-        if end > self._nbits:
-            raise ValueError("VP8L bitstream exhausted")
-        # LSB-first: one small little-endian slice instead of a per-bit loop
-        chunk = int.from_bytes(self._data[p >> 3 : (end + 7) >> 3], "little")
-        self._pos = end
-        return (chunk >> (p & 7)) & ((1 << nbits) - 1)
-
-    def peek(self, nbits: int) -> int:
-        """Next ``nbits`` LSB-first without consuming; bits past the end
-        of the stream read as 0 (callers must skip() only real bits)."""
-        p = self._pos
-        end = min(p + nbits, self._nbits)
-        chunk = int.from_bytes(self._data[p >> 3 : (end + 7) >> 3], "little")
-        return (chunk >> (p & 7)) & ((1 << nbits) - 1)
-
-    def skip(self, nbits: int) -> None:
-        if self._pos + nbits > self._nbits:
-            raise ValueError("VP8L bitstream exhausted")
-        self._pos += nbits
+from pipeline_mf_etl_spark.operators.bits import (
+    LSBReader,
+    LSBWriter,
+    canonical_codes,
+    peek_lut,
+    read_walk,
+    reverse_bits,
+)
 
 
 # ---------------------------------------------------------------------------
-# Canonical prefix codes (DEFLATE-style assignment, MSB-first reading)
+# Canonical prefix codes (DEFLATE-style assignment). VP8L packs bits
+# LSB-first but reads each code MSB-of-code first, one bit at a time.
 # ---------------------------------------------------------------------------
 
 
-def canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """sym -> (code, nbits), canonical assignment: codes ordered by
-    (length, symbol)."""
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    prev_len = 0
-    for sym in sorted(lengths, key=lambda s: (lengths[s], s)):
-        ln = lengths[sym]
-        code <<= ln - prev_len
-        out[sym] = (code, ln)
-        code += 1
-        prev_len = ln
+def _writer_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
+    """sym -> (code as the LSB-first writer emits it, i.e. bit-reversed,
+    nbits). A lone 0-bit code writes nothing."""
+    syms = sorted(lengths)
+    codes = canonical_codes([lengths[s] for s in syms], syms)
+    out = {s: (0, 0) for s in syms}
+    out.update((s, (reverse_bits(c, n), n)) for s, c, n in codes)
     return out
 
 
 class PrefixDecoder:
-    """Bit-by-bit canonical decoder with a completeness gate (an
-    over-/under-subscribed code is corrupt, except 0-bit single-symbol
-    codes from the simple path)."""
+    """Canonical decoder with a completeness gate (an over-/under-
+    subscribed code is corrupt, except 0-bit single-symbol codes from
+    the simple path)."""
 
     def __init__(self, lengths: dict[int, int], allow_single: bool = False):
         if not lengths:
@@ -134,43 +74,26 @@ class PrefixDecoder:
             raise ValueError(f"prefix code not complete (Kraft sum {kraft})")
         self.single = None
         self.max_len = max(lengths.values())
-        self.table = {
-            (ln, code): sym for sym, (code, ln) in canonical_codes(lengths).items()
-        }
+        syms = sorted(lengths)
+        codes = canonical_codes([lengths[s] for s in syms], syms)
+        self.table = {(ln, code): sym for sym, code, ln in codes}
         # peek-table fast path: one max_len-bit peek resolves (symbol,
-        # length) in a single list index. The stream serves code bits
-        # MSB-of-code-first but LSB-first within the word we peek, so
-        # each code's table slots are its BIT-REVERSED value plus every
-        # high-bit completion. Kraft completeness guarantees full
-        # coverage. Capped to keep table build O(1k) per decoder.
-        self.fast: list[tuple[int, int]] | None = None
-        if self.max_len <= 11:
-            span = 1 << self.max_len
-            fast = [(-1, 0)] * span
-            for sym, (code, ln) in canonical_codes(lengths).items():
-                rev = 0
-                c = code
-                for _ in range(ln):
-                    rev = (rev << 1) | (c & 1)
-                    c >>= 1
-                for k in range(1 << (self.max_len - ln)):
-                    fast[rev | (k << ln)] = (sym, ln)
-            self.fast = fast
+        # length) in a single list index; Kraft completeness guarantees
+        # full coverage. Capped to keep table build O(1k) per decoder.
+        self.fast = (
+            peek_lut(codes, self.max_len, lsb_first=True)
+            if self.max_len <= 11
+            else None
+        )
 
-    def read(self, br: BitReader) -> int:
+    def read(self, br: LSBReader) -> int:
         if self.single is not None:
             return self.single
         if self.fast is not None:
-            sym, ln = self.fast[br.peek(self.max_len)]
-            br.skip(ln)  # raises if the code ran past the stream end
-            return sym
-        code = 0
-        for ln in range(1, self.max_len + 1):
-            code = (code << 1) | br.read(1)
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid prefix code in VP8L stream")
+            pk = self.fast[br.peek(self.max_len)]
+            br.read(pk & 31)  # raises if the code ran past the stream end
+            return pk >> 5
+        return read_walk(br, self.table, self.max_len)
 
 
 def balanced_lengths(symbols: list[int]) -> dict[int, int]:
@@ -192,7 +115,7 @@ def balanced_lengths(symbols: list[int]) -> dict[int, int]:
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
 
-def _write_prefix_code(bw: BitWriter, hist: dict[int, int], alphabet: int) -> None:
+def _write_prefix_code(bw: LSBWriter, hist: dict[int, int], alphabet: int) -> None:
     """Serialize one prefix code. <=2 used symbols that fit in a byte
     take the SIMPLE path; everything else the normal code-length-code
     path with a balanced complete code."""
@@ -264,15 +187,15 @@ def _write_prefix_code(bw: BitWriter, hist: dict[int, int], alphabet: int) -> No
     for pos in range(n_cl):
         bw.write(cl_lengths.get(_CL_ORDER[pos], 0), 3)
     bw.write(0, 1)  # no explicit max_symbol
-    cl_codes = canonical_codes(cl_lengths)
+    cl_codes = _writer_codes(cl_lengths)
     for sym, extra, ebits in ops:
         code, nb = cl_codes[sym]
-        bw.write_code(code, nb)
+        bw.write(code, nb)
         if ebits:
             bw.write(extra, ebits)
 
 
-def _read_prefix_code(br: BitReader, alphabet: int) -> PrefixDecoder:
+def _read_prefix_code(br: LSBReader, alphabet: int) -> PrefixDecoder:
     if br.read(1):  # simple
         n_sym = br.read(1) + 1
         first_8 = br.read(1)
@@ -334,7 +257,7 @@ def _prefix_encode(v: int) -> tuple[int, int, int]:
     return 2 * eb + 2, x - (2 << eb), eb
 
 
-def _prefix_decode(sym: int, br: BitReader) -> int:
+def _prefix_decode(sym: int, br: LSBReader) -> int:
     if sym < 4:
         return sym + 1
     eb = (sym - 2) >> 1
@@ -397,7 +320,7 @@ def _build_ops(pixels: list[int], w: int, h: int, cache_bits: int):
 
 
 def _write_entropy_image(
-    bw: BitWriter,
+    bw: LSBWriter,
     pixels: list[int],
     w: int,
     h: int,
@@ -452,11 +375,11 @@ def _write_entropy_image(
             lens = {used[0]: 0} if len(used) == 1 else {used[0]: 1, used[1]: 1}
         else:
             lens = balanced_lengths(used)
-        codes.append(canonical_codes(lens))
+        codes.append(_writer_codes(lens))
 
     def put(i, s):
         code, nb = codes[i][s]
-        bw.write_code(code, nb)
+        bw.write(code, nb)
 
     for op in ops:
         if op[0] == "lit":
@@ -479,7 +402,7 @@ def _write_entropy_image(
 
 
 def _read_entropy_image(
-    br: BitReader, w: int, h: int, level0: bool = False
+    br: LSBReader, w: int, h: int, level0: bool = False
 ) -> tuple[list[int], int]:
     """Decode one entropy-coded image; returns (pixels, cache_bits)."""
     cache_bits = br.read(4) if br.read(1) else 0
@@ -733,7 +656,7 @@ def decode_vp8l(data: bytes) -> dict:
     actually read from the stream, and the ARGB pixel list."""
     if not data or data[0] != 0x2F:
         raise ValueError("VP8L missing 0x2F signature byte")
-    br = BitReader(data)
+    br = LSBReader(data)
     br.read(8)
     w = br.read(14) + 1
     h = br.read(14) + 1
@@ -898,7 +821,7 @@ def encode_webp_lossless(doc_id: int, text: str) -> bytes | None:
     cache_bits = 0 if doc_id % 2 == 0 else 6
     huff = doc_id % 3 == 0
 
-    bw = BitWriter()
+    bw = LSBWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)

@@ -30,221 +30,53 @@ from __future__ import annotations
 
 import numpy as np
 
+from pipeline_mf_etl_spark.operators.bits import (
+    MSBReader,
+    MSBWriter,
+    canonical_codes,
+    huffman_depths,
+    make_crc,
+    peek_lut,
+    read_walk,
+)
+
 _BLOCK_MAGIC = 0x314159265359  # pi
 _FOOTER_MAGIC = 0x177245385090  # sqrt(pi)
 _MAX_HUF_LEN = 20
 _GROUP_SIZE = 50  # symbols per Huffman group selector
 
 
-# ---------------------------------------------------------------------------
-# bzip2 CRC-32: same polynomial as zip (0x04C11DB7) but MSB-first
-# (non-reflected), init/final-xor 0xFFFFFFFF
-# ---------------------------------------------------------------------------
-
-
-def _crc_table() -> list[int]:
-    tbl = []
-    for i in range(256):
-        c = i << 24
-        for _ in range(8):
-            c = ((c << 1) ^ 0x04C11DB7) if c & 0x80000000 else (c << 1)
-            c &= 0xFFFFFFFF
-        tbl.append(c)
-    return tbl
-
-
-_CRC_TABLE = _crc_table()
-
-
-def bz2_crc32(data: bytes) -> int:
-    crc = 0xFFFFFFFF
-    tbl = _CRC_TABLE
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ tbl[((crc >> 24) ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
-
-
-# ---------------------------------------------------------------------------
-# MSB-first bit IO (bzip2 is big-endian bit order, unlike zstd/LZ4) —
-# O(1) byte accumulators per the r12 zstd lesson (SCALE.md): never keep
-# the whole stream in one big int.
-# ---------------------------------------------------------------------------
-
-
-class _BitReader:
-    __slots__ = ("data", "byte_pos", "acc", "nbits")
-
-    def __init__(self, data: bytes, byte_pos: int = 0):
-        self.data = data
-        self.byte_pos = byte_pos
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.byte_pos >= len(self.data):
-                raise ValueError("bzip2 payload truncated mid-bitstream")
-            self.acc = (self.acc << 8) | self.data[self.byte_pos]
-            self.byte_pos += 1
-            self.nbits += 8
-        self.nbits -= n
-        val = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return val
-
-    def peek(self, n: int) -> int:
-        """Next ``n`` bits without consuming; ZERO-padded past the end
-        of the payload (the peek-table fast path may look further than
-        the stream has — `skip` still refuses to consume phantom
-        bits)."""
-        while self.nbits < n and self.byte_pos < len(self.data):
-            self.acc = (self.acc << 8) | self.data[self.byte_pos]
-            self.byte_pos += 1
-            self.nbits += 8
-        if self.nbits >= n:
-            return (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        return (self.acc << (n - self.nbits)) & ((1 << n) - 1)
-
-    def skip(self, n: int) -> None:
-        if n > self.nbits:
-            raise ValueError("bzip2 payload truncated mid-bitstream")
-        self.nbits -= n
-        self.acc &= (1 << self.nbits) - 1
-
-    def bit_pos(self) -> int:
-        return self.byte_pos * 8 - self.nbits
-
-
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, val: int, n: int) -> None:
-        self.acc = (self.acc << n) | (val & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-            self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.out.append((self.acc << (8 - self.nbits)) & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.out)
+# bzip2 CRC-32: the zip polynomial, but MSB-first (non-reflected)
+bz2_crc32 = make_crc(
+    0x04C11DB7, 32, reflect=False, init=0xFFFFFFFF, xorout=0xFFFFFFFF
+)
 
 
 # ---------------------------------------------------------------------------
 # canonical Huffman (bzip2 flavor: codes assigned in (length, symbol)
-# order; decode via the limit/base/perm walk)
+# order). Codes up to _PEEK_BITS long decode through one peek-table
+# probe; longer ones fall back to a bit-at-a-time walk.
 # ---------------------------------------------------------------------------
-
-
-def _huff_decode_table(lens: list[int]):
-    min_len, max_len = min(lens), max(lens)
-    perm: list[int] = []
-    count = [0] * (max_len + 1)
-    for length in range(min_len, max_len + 1):
-        for s, ln in enumerate(lens):
-            if ln == length:
-                perm.append(s)
-        count[length] = sum(1 for ln in lens if ln == length)
-    limit = [0] * (max_len + 1)
-    base = [0] * (max_len + 1)
-    vec = 0
-    seen = 0
-    for length in range(min_len, max_len + 1):
-        base[length] = vec - seen
-        vec += count[length]
-        seen += count[length]
-        limit[length] = vec - 1
-        vec <<= 1
-    return min_len, max_len, limit, base, perm, _huff_peek_table(lens)
-
-
-def _huff_read_symbol(br: _BitReader, tbl) -> int:
-    min_len, max_len, limit, base, perm, _peek = tbl
-    length = min_len
-    v = br.read(min_len)
-    while True:
-        if v <= limit[length]:
-            return perm[v - base[length]]
-        if length >= max_len:
-            raise ValueError("bzip2 Huffman code outside table")
-        v = (v << 1) | br.read(1)
-        length += 1
-
 
 _PEEK_BITS = 11  # 2048-entry (symbol, length) LUT per table
 
 
-def _huff_peek_table(lens: list[int]) -> list[int]:
-    """(symbol << 5) | length packed LUT over every _PEEK_BITS-bit
-    prefix; 0 marks codes longer than the peek width (walk fallback).
-    Built once per Huffman table — the VP8L peek-table lesson (r12):
-    one list index replaces the per-bit limit/base walk on the hot
-    path."""
-    codes = _huff_codes(lens)
-    lut = [0] * (1 << _PEEK_BITS)
-    for sym, (code, length) in enumerate(zip(codes, lens)):
-        if length > _PEEK_BITS:
-            continue
-        packed = (sym << 5) | length
-        lo = code << (_PEEK_BITS - length)
-        for e in range(lo, lo + (1 << (_PEEK_BITS - length))):
-            lut[e] = packed
-    return lut
+def _huff_decode_table(lens: list[int]):
+    codes = canonical_codes(lens, range(len(lens)))
+    walk = {(ln, code): s for s, code, ln in codes}
+    return max(lens), walk, peek_lut(codes, _PEEK_BITS, lsb_first=False)
 
 
 def _huff_lengths(freq: list[int]) -> list[int]:
     """Depth-capped Huffman lengths (libbzip2 strategy: halve the
     frequencies and rebuild until the tree fits 20 bits)."""
-    import heapq
-
     f = [max(1, x) for x in freq]
     while True:
-        if len(f) == 1:
-            return [1]
-        heap = [(w, i, None) for i, w in enumerate(f)]
-        heapq.heapify(heap)
-        uid = len(f)
-        children: dict[int, tuple] = {}
-        while len(heap) > 1:
-            a = heapq.heappop(heap)
-            b = heapq.heappop(heap)
-            children[uid] = (a[1], b[1])
-            heapq.heappush(heap, (a[0] + b[0], uid, None))
-            uid += 1
-        lens = [0] * len(f)
-        stack = [(heap[0][1], 0)]
-        while stack:
-            node, d = stack.pop()
-            if node in children:
-                left, right = children[node]
-                stack.append((left, d + 1))
-                stack.append((right, d + 1))
-            else:
-                lens[node] = max(d, 1)
+        depths = huffman_depths(dict(enumerate(f)))
+        lens = [depths[i] for i in range(len(f))]
         if max(lens) <= _MAX_HUF_LEN:
             return lens
         f = [max(1, x >> 1) for x in f]
-
-
-def _huff_codes(lens: list[int]) -> list[int]:
-    codes = [0] * len(lens)
-    vec = 0
-    for length in range(min(lens), max(lens) + 1):
-        for s, ln in enumerate(lens):
-            if ln == length:
-                codes[s] = vec
-                vec += 1
-        vec <<= 1
-    return codes
 
 
 # ---------------------------------------------------------------------------
@@ -401,7 +233,7 @@ def _mtf_rle2_encode(bwt: bytes, used: list[int]) -> list[int]:
 # ---------------------------------------------------------------------------
 
 
-def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
+def _decode_block(br: MSBReader, level: int) -> tuple[bytes, int]:
     # libbzip2's nblockMAX: the PRE-BWT block (the MTF/RLE2-decoded BWT
     # string) is capped at level*100_000 bytes. The RLE1-decoded output
     # may legally be up to ~51x larger (4-byte run + count byte -> 255
@@ -472,7 +304,7 @@ def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
     # bottleneck (same lesson as VP8L's peek table, r12)
     data = br.data
     n_data = len(data)
-    pos = br.byte_pos
+    pos = br.pos
     acc = br.acc
     nbits = br.nbits
     while True:
@@ -480,7 +312,7 @@ def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
             if sel_idx >= len(selectors):
                 raise ValueError("bzip2 selectors exhausted mid-block")
             tbl = tables[selectors[sel_idx]]
-            lut = tbl[5]
+            lut = tbl[2]
             sel_idx += 1
             count = _GROUP_SIZE
         count -= 1
@@ -500,10 +332,10 @@ def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
             nbits -= ln
             acc &= (1 << nbits) - 1
             s = pk >> 5
-        else:  # code longer than the peek width: limit/base walk
-            br.byte_pos, br.acc, br.nbits = pos, acc, nbits
-            s = _huff_read_symbol(br, tbl)
-            pos, acc, nbits = br.byte_pos, br.acc, br.nbits
+        else:  # code longer than the peek width: bit-at-a-time walk
+            br.pos, br.acc, br.nbits = pos, acc, nbits
+            s = read_walk(br, tbl[1], tbl[0])
+            pos, acc, nbits = br.pos, br.acc, br.nbits
         if s <= 1:  # RUNA / RUNB
             run += inc * (s + 1)
             inc <<= 1
@@ -523,7 +355,7 @@ def _decode_block(br: _BitReader, level: int) -> tuple[bytes, int]:
         if len(bwt) >= block_cap and s != eob:
             raise ValueError("bzip2 block exceeds its declared level")
         if s == eob:
-            br.byte_pos, br.acc, br.nbits = pos, acc, nbits
+            br.pos, br.acc, br.nbits = pos, acc, nbits
             break
         b = mtf[s - 1]
         del mtf[s - 1]
@@ -552,10 +384,11 @@ def decode_bzip2_at(payload: bytes, offset: int) -> dict:
     the byte offset just past the stream's footer padding."""
     if payload[offset : offset + 3] != b"BZh":
         raise ValueError(f"bad bzip2 stream magic at offset {offset}")
-    level = payload[offset + 3] - 0x30
+    # a missing level byte reads as 0 and fails the digit check
+    level = int.from_bytes(payload[offset + 3 : offset + 4], "big") - 0x30
     if not 1 <= level <= 9:
         raise ValueError(f"bad bzip2 level digit at offset {offset}")
-    br = _BitReader(payload, offset + 4)
+    br = MSBReader(payload, offset + 4)
     content = bytearray()
     stream_crc = 0
     n_blocks = 0
@@ -621,7 +454,7 @@ def decode_bzip2_stream(payload: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _encode_block(bw: _BitWriter, chunk: bytes) -> int:
+def _encode_block(bw: MSBWriter, chunk: bytes) -> int:
     """Encode one block from RAW bytes (RLE1 applied here, per block —
     runs never span blocks); returns the block CRC (of the raw bytes,
     as the decoder recomputes it)."""
@@ -635,7 +468,7 @@ def _encode_block(bw: _BitWriter, chunk: bytes) -> int:
     for s in syms:
         freq[s] += 1
     lens = _huff_lengths(freq)
-    codes = _huff_codes(lens)
+    codes = {s: (c, n) for s, c, n in canonical_codes(lens, range(alpha))}
     n_selectors = (len(syms) + _GROUP_SIZE - 1) // _GROUP_SIZE
     if n_selectors >= 1 << 15:
         raise ValueError("bzip2 block needs too many selectors")
@@ -679,8 +512,8 @@ def _encode_block(bw: _BitWriter, chunk: bytes) -> int:
     nbits = bw.nbits
     out = bw.out
     for s in syms:
-        ln = lens[s]
-        acc = (acc << ln) | codes[s]
+        code, ln = codes[s]
+        acc = (acc << ln) | code
         nbits += ln
         while nbits >= 8:
             nbits -= 8
@@ -710,7 +543,7 @@ def encode_bzip2(
             f"block_bytes {block_bytes} cannot fit level {level}'s buffer "
             f"after worst-case RLE1 expansion"
         )
-    bw = _BitWriter()
+    bw = MSBWriter()
     bw.write(int.from_bytes(b"BZh", "big"), 24)
     bw.write(0x30 + level, 8)
     stream_crc = 0
@@ -721,7 +554,7 @@ def encode_bzip2(
         ) ^ blk_crc
     bw.write(_FOOTER_MAGIC, 48)
     bw.write(stream_crc, 32)
-    return bw.flush()
+    return bw.getvalue()
 
 
 def encode_bzip2_multistream(

@@ -34,23 +34,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# ---------------------------------------------------------------------------
-# CRC-32C (Castagnoli) — reflected polynomial 0x82F63B78
-# ---------------------------------------------------------------------------
+from pipeline_mf_etl_spark.operators.bits import make_crc
 
-_CRC32C_TABLE = []
-for _n in range(256):
-    _c = _n
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
-    _CRC32C_TABLE.append(_c)
-
-
-def crc32c(data: bytes) -> int:
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = _CRC32C_TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
+# CRC-32C (Castagnoli), reflected; TFRecord framing reuses it
+crc32c = make_crc(0x1EDC6F41, 32, reflect=True, init=0xFFFFFFFF, xorout=0xFFFFFFFF)
 
 
 def _mask_crc(crc: int) -> int:

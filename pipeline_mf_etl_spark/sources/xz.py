@@ -26,6 +26,8 @@ from __future__ import annotations
 import hashlib
 import zlib
 
+from pipeline_mf_etl_spark.operators.bits import make_crc
+
 _XZ_MAGIC = b"\xfd7zXZ\x00"
 _XZ_FOOTER_MAGIC = b"YZ"
 _FILTER_LZMA2 = 0x21
@@ -33,31 +35,14 @@ _CHECK_SIZES = {0x00: 0, 0x01: 4, 0x04: 8, 0x0A: 32}
 _CHECK_NAMES = {0x00: "none", 0x01: "crc32", 0x04: "crc64", 0x0A: "sha256"}
 
 
-# ---------------------------------------------------------------------------
-# CRC64-ECMA (reflected, poly 0x42F0E1EBA9EA3693) — xz's default check
-# ---------------------------------------------------------------------------
-
-
-def _crc64_table() -> list[int]:
-    poly = 0xC96C5795D7870F42  # reflected 0x42F0E1EBA9EA3693
-    tbl = []
-    for i in range(256):
-        c = i
-        for _ in range(8):
-            c = (c >> 1) ^ poly if c & 1 else c >> 1
-        tbl.append(c)
-    return tbl
-
-
-_CRC64_TABLE = _crc64_table()
-
-
-def xz_crc64(data: bytes, crc: int = 0) -> int:
-    crc ^= 0xFFFFFFFFFFFFFFFF
-    tbl = _CRC64_TABLE
-    for b in data:
-        crc = (crc >> 8) ^ tbl[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFFFFFFFFFF
+# CRC64-ECMA-182 in its reflected form: xz's default block check
+xz_crc64 = make_crc(
+    0x42F0E1EBA9EA3693,
+    64,
+    reflect=True,
+    init=0xFFFFFFFFFFFFFFFF,
+    xorout=0xFFFFFFFFFFFFFFFF,
+)
 
 
 def _varint(data: bytes, pos: int) -> tuple[int, int]:
@@ -338,12 +323,14 @@ def _lzma2_decode(data: bytes, pos: int, end: int) -> tuple[bytes, int, int]:
             continue
         if control < 0x80:
             raise ValueError(f"invalid LZMA2 control byte {control:#04x}")
+        reset = (control >> 5) & 0x3
+        if pos + 4 + (reset >= 2) > end:
+            raise ValueError("LZMA2 chunk header truncated")
         unpack = ((control & 0x1F) << 16) + int.from_bytes(
             data[pos : pos + 2], "big"
         ) + 1
         pack = int.from_bytes(data[pos + 2 : pos + 4], "big") + 1
         pos += 4
-        reset = (control >> 5) & 0x3
         if need_dict_reset and reset != 3:
             raise ValueError("LZMA2 stream must open with a dictionary reset")
         need_dict_reset = False
@@ -411,6 +398,8 @@ def decode_xz_stream(payload: bytes) -> dict:
         start = pos
         if payload[pos : pos + 6] != _XZ_MAGIC:
             raise ValueError(f"bad xz stream magic at offset {pos}")
+        if len(payload) < pos + 12:
+            raise ValueError("xz stream header truncated")
         flags = payload[pos + 6 : pos + 8]
         if flags[0] != 0 or flags[1] & 0xF0:
             raise ValueError("reserved xz stream flags set")
@@ -422,6 +411,8 @@ def decode_xz_stream(payload: bytes) -> dict:
         pos += 12
         blocks: list[tuple[int, int]] = []  # (unpadded_size, uncompressed)
         while True:
+            if pos >= len(payload):
+                raise ValueError("xz stream truncated before its index")
             bhs = payload[pos]
             if bhs == 0x00:
                 break  # index follows
@@ -503,8 +494,8 @@ def decode_xz_stream(payload: bytes) -> dict:
             if iu != unpadded or iuc != unc:
                 raise ValueError("xz index record disagrees with its block")
         while (pos - idx_start) % 4:
-            if payload[pos]:
-                raise ValueError("xz index padding not zero")
+            if payload[pos : pos + 1] != b"\x00":
+                raise ValueError("xz index padding truncated or not zero")
             pos += 1
         if int.from_bytes(payload[pos : pos + 4], "little") != zlib.crc32(
             payload[idx_start:pos]

@@ -72,6 +72,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pipeline_mf_etl_spark.operators.bits import LSBReader, LSBWriter, huffman_depths
+
 ZSTD_MAGIC = 0xFD2FB528
 
 _M64 = (1 << 64) - 1
@@ -128,8 +130,10 @@ def xxh64(data: bytes, seed: int = 0) -> int:
 
 
 # ---------------------------------------------------------------------------
-# bit IO — zstd entropy payloads are read BACKWARD from a sentinel bit;
-# table descriptions are read FORWARD bit-by-bit (LSB first)
+# bit IO — zstd entropy payloads are read BACKWARD from a sentinel bit
+# (the only backward stream in the package, so its reader and writer
+# live here); table descriptions are read FORWARD, LSB-first, through
+# the shared operators/bits.py reader and writer
 # ---------------------------------------------------------------------------
 
 
@@ -205,32 +209,6 @@ class _BackBits:
         else:
             self.acc = 0
             self.acc_bits = 0
-
-
-class _FwdBits:
-    """Forward LSB-first bit reader (FSE table descriptions)."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        out = 0
-        for k in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("FSE table description runs off the block")
-            out |= ((self.data[byte] >> (self.pos & 7)) & 1) << k
-            self.pos += 1
-        return out
-
-    def rewind(self, n: int) -> None:
-        self.pos -= n
-
-    def byte_pos(self) -> int:
-        return (self.pos + 7) >> 3
 
 
 class _BitWriter:
@@ -368,7 +346,7 @@ def fse_read_description(
     """Parse a forward-read FSE table description; returns the built
     table and the number of BYTES consumed (descriptions are
     byte-aligned at their end)."""
-    fb = _FwdBits(data)
+    fb = LSBReader(data)
     alog = fb.read(4) + 5
     if alog > max_alog:
         raise ValueError(f"FSE accuracy log {alog} exceeds the maximum {max_alog}")
@@ -381,14 +359,16 @@ def fse_read_description(
         # distributed points); fields code 0..remaining, short values
         # drop the top bit (spec §4.1.1 variable-width encoding)
         bits = remaining.bit_length()
-        val = fb.read(bits)
+        val = fb.peek(bits)
         low_mask = (1 << (bits - 1)) - 1
         threshold = (1 << bits) - 1 - remaining
         if (val & low_mask) < threshold:
-            fb.rewind(1)
+            fb.read(bits - 1)
             val &= low_mask
-        elif val > low_mask:
-            val -= threshold
+        else:
+            fb.read(bits)
+            if val > low_mask:
+                val -= threshold
         proba = val - 1
         norm.append(proba)
         remaining -= -proba if proba < 0 else proba
@@ -402,13 +382,14 @@ def fse_read_description(
                     break
     if remaining != 1:
         raise ValueError("FSE distribution overshoots the table size")
-    return FseTable(norm, alog), fb.byte_pos()
+    return FseTable(norm, alog), (fb.bit_pos() + 7) >> 3
 
 
 def fse_write_description(norm: list[int], alog: int) -> bytes:
     """Emit the forward-read table description for ``norm`` (the exact
     inverse of fse_read_description)."""
-    bits_out: list[tuple[int, int]] = [(alog - 5, 4)]
+    w = LSBWriter()
+    w.write(alog - 5, 4)
     remaining = (1 << alog) + 1
     i = 0
     while remaining > 1:
@@ -418,11 +399,11 @@ def fse_write_description(norm: list[int], alog: int) -> bytes:
         threshold = (1 << bits) - 1 - remaining
         val = proba + 1
         if val < threshold:
-            bits_out.append((val, bits - 1))
+            w.write(val, bits - 1)
         else:
             # large values set the top bit; values whose low bits
             # collide with a small value get the threshold offset
-            bits_out.append((val + threshold if val > low_mask else val, bits))
+            w.write(val + threshold if val > low_mask else val, bits)
         remaining -= -proba if proba < 0 else proba
         i += 1
         if proba == 0:
@@ -432,23 +413,11 @@ def fse_write_description(norm: list[int], alog: int) -> bytes:
                 run += 1
             i += run
             while True:
-                bits_out.append((min(run, 3), 2))
+                w.write(min(run, 3), 2)
                 if run < 3:
                     break
                 run -= 3
-    # serialize LSB-first
-    out = bytearray()
-    acc = nb = 0
-    for v, n in bits_out:
-        acc |= v << nb
-        nb += n
-        while nb >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nb -= 8
-    if nb:
-        out.append(acc & 0xFF)
-    return bytes(out)
+    return w.getvalue()
 
 
 # the RFC 8878 default distributions (Predefined_Mode tables)
@@ -621,30 +590,9 @@ def huf_build_weights(hist: dict[int, int]) -> list[int] | None:
     weight list (index = symbol, length = last symbol + 1) or None when
     Huffman coding does not apply (degenerate alphabet / too deep /
     alphabet too large for a direct-weight header)."""
-    import heapq
-
     if len(hist) < 2:
         return None
-    heap = [(c, s, None, None) for s, c in hist.items()]
-    heapq.heapify(heap)
-    uid = 256
-    nodes = {}
-    while len(heap) > 1:
-        c1 = heapq.heappop(heap)
-        c2 = heapq.heappop(heap)
-        nodes[uid] = (c1[1], c2[1])
-        heapq.heappush(heap, (c1[0] + c2[0], uid, None, None))
-        uid += 1
-    depths: dict[int, int] = {}
-    stack = [(heap[0][1], 0)]
-    while stack:
-        node, d = stack.pop()
-        if node in nodes:
-            left, right = nodes[node]
-            stack.append((left, d + 1))
-            stack.append((right, d + 1))
-        else:
-            depths[node] = max(d, 1)
+    depths = huffman_depths(hist)
     max_depth = max(depths.values())
     if max_depth > _HUF_MAX_BITS:
         return None  # depth-limiting not implemented; caller stores raw
@@ -781,6 +729,8 @@ def _seq_tables(
     if mode == 0:  # Predefined
         return default, pos, default
     if mode == 1:  # RLE: one byte, that symbol for every sequence
+        if pos >= len(data):
+            raise ValueError(f"{what} RLE symbol missing")
         sym = data[pos]
         if sym > max_symbol:
             raise ValueError(f"{what} RLE symbol {sym} out of range")
@@ -917,15 +867,20 @@ def _decode_sequences(
 ) -> list[tuple[int, int, int]]:
     """Returns [(literal_length, offset_value, match_length)] with
     offset_value still raw (repeat resolution happens at execution)."""
+    if not data:
+        raise ValueError("zstd sequences section is empty")
     b0 = data[0]
     if b0 == 0:
         return []
+    pos = 1 if b0 < 128 else 2 if b0 < 255 else 3
+    if len(data) <= pos:
+        raise ValueError("zstd sequences section header truncated")
     if b0 < 128:
-        ns, pos = b0, 1
+        ns = b0
     elif b0 < 255:
-        ns, pos = ((b0 - 128) << 8) | data[1], 2
+        ns = ((b0 - 128) << 8) | data[1]
     else:
-        ns, pos = int.from_bytes(data[1:3], "little") + 0x7F00, 3
+        ns = int.from_bytes(data[1:3], "little") + 0x7F00
     modes = data[pos]
     pos += 1
     if modes & 3:
@@ -1090,6 +1045,8 @@ def _decode_one_frame(payload: bytes, pos: int) -> tuple[dict, int]:
         raise ValueError("not a zstd frame (bad magic)")
     payload = payload[pos:]  # frame-relative below; absolute pos re-added
     abs_base = pos
+    if len(payload) < 5:
+        raise ValueError("zstd frame header truncated")
     fhd = payload[4]
     fcs_flag = fhd >> 6
     single_segment = bool(fhd & 0x20)
@@ -1099,14 +1056,16 @@ def _decode_one_frame(payload: bytes, pos: int) -> tuple[dict, int]:
     did_flag = fhd & 0x03
     if did_flag:
         raise NotImplementedError("zstd dictionaries (DictID) not supported")
+    fcs_bytes = {0: 1 if single_segment else 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
     pos = 5
+    if len(payload) < pos + (not single_segment) + fcs_bytes:
+        raise ValueError("zstd frame header truncated")
     window = None
     if not single_segment:
         wd = payload[pos]
         pos += 1
         base = 1 << (10 + (wd >> 3))
         window = base + (base >> 3) * (wd & 7)
-    fcs_bytes = {0: 1 if single_segment else 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
     declared = None
     if fcs_bytes:
         declared = int.from_bytes(payload[pos : pos + fcs_bytes], "little")

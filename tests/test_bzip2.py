@@ -223,6 +223,8 @@ class TestCorruption:
             decode_bzip2_stream(b"BX" + b"\x00" * 16)
         with pytest.raises(ValueError, match="level"):
             decode_bzip2_stream(b"BZh0" + b"\x00" * 16)
+        with pytest.raises(ValueError, match="level"):
+            decode_bzip2_stream(b"BZh")  # level byte missing
 
     def test_truncated_payload(self):
         enc = encode_bzip2(b"truncate me\n" * 20)
@@ -232,6 +234,16 @@ class TestCorruption:
     def test_empty_payload(self):
         with pytest.raises(ValueError, match="empty"):
             decode_bzip2_stream(b"")
+
+    def test_oversubscribed_huffman_lengths_raise_valueerror(self):
+        # one bit flip in the first table's delta-coded code lengths
+        # over-subscribes the canonical code (a fuzz find that once
+        # escaped as an IndexError from the peek-table build)
+        text = ("The quick brown fox jumps over the lazy dog. " * 3 + "abcxx").encode()
+        bad = bytearray(encode_bzip2(text))
+        bad[261 >> 3] ^= 1 << (261 & 7)
+        with pytest.raises(ValueError, match="over-subscribed"):
+            decode_bzip2_stream(bytes(bad))
 
     def test_every_byte_flip_is_loud_or_accounted(self):
         """The c6/c7 integrity convention: flipping ANY single byte of

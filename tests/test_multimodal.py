@@ -740,6 +740,50 @@ class TestJpegCodec:
         with pytest.raises(ValueError, match="geometry"):
             encode_jpeg_gray(b"\x00" * 63, 8, 8)
 
+    def test_malformed_entropy_tables_raise_valueerror(self):
+        # fuzz finds (single bit flips) that once escaped as IndexError /
+        # OverflowError instead of the declared ValueError
+        import numpy as np
+        import pytest
+
+        from pipeline_mf_etl_spark.operators.bits import MSBWriter
+        from pipeline_mf_etl_spark.operators.multimodal import (
+            encode_jpeg_gray,
+            encode_jpeg_progressive_gray,
+            parse_jpeg,
+        )
+
+        def flip(payload: bytes, bit: int) -> bytes:
+            out = bytearray(payload)
+            out[bit >> 3] ^= 1 << (bit & 7)
+            return bytes(out)
+
+        rng = np.random.default_rng(0)
+        gray = rng.integers(0, 256, size=64 * 48, dtype=np.uint8).tobytes()
+        # the AC DHT's length-1 count grows to 32: over-subscribed, and
+        # the table lists fewer values than its counts require
+        with pytest.raises(ValueError, match="Huffman"):
+            parse_jpeg(flip(encode_jpeg_gray(gray, 64, 48), 1093))
+        # a DC table value turns into a category far above 11
+        prog = encode_jpeg_progressive_gray(gray[: 32 * 32], 32, 32)
+        with pytest.raises(ValueError, match="category"):
+            parse_jpeg(flip(prog, 998))
+        # sequential path: DC category 3 relabelled 70, and a scan that
+        # really carries 70 magnitude bits, so the decode runs to the end
+        base = encode_jpeg_gray(bytes([128]) * 64, 8, 8)
+        dht = base.index(b"\xff\xc4")
+        sos = base.index(b"\xff\xda")
+        tables = bytearray(base[: sos + 2 + int.from_bytes(base[sos + 2 : sos + 4], "big")])
+        tables[dht + 4 + 1 + 16 + 3] = 70
+        w = MSBWriter()
+        w.write(0b0011, 4)  # DC code of the category-3 slot
+        w.write((1 << 70) - 1, 70)
+        w.write(0, 8)  # AC end-of-block
+        w.write((1 << (-w.nbits & 7)) - 1, -w.nbits & 7)
+        scan = w.getvalue().replace(b"\xff", b"\xff\x00")
+        with pytest.raises(ValueError, match="category"):
+            parse_jpeg(bytes(tables) + scan + b"\xff\xd9")
+
     def test_byte_stuffing_survives(self):
         # craft an image whose entropy stream is guaranteed to contain
         # 0xFF bytes (dense high-category coefficients) and assert the

@@ -164,9 +164,12 @@ class TestCorruption:
             decode_xz_stream(b"")
 
     def test_truncation_is_loud(self):
+        # every prefix, including those that end inside the stream
+        # header (6), before the index (12), inside an LZMA2 chunk
+        # header (25) and inside the index padding (69)
         enc = lzma.compress(b"truncate me\n" * 40, format=lzma.FORMAT_XZ)
-        for cut in (5, len(enc) // 2, len(enc) - 3):
-            with pytest.raises((ValueError, IndexError)):
+        for cut in range(1, len(enc)):
+            with pytest.raises(ValueError):
                 decode_xz_stream(enc[:cut])
 
     def test_unsupported_filter_chain_gates(self):

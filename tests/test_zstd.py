@@ -23,6 +23,8 @@ from pipeline_mf_etl_spark.sources.zstdframe import (
     HufTable,
     _BackBits,
     _BitWriter,
+    _decode_sequences,
+    _EntropyCtx,
     _LL_DEFAULT,
     _ML_DEFAULT,
     _OF_DEFAULT,
@@ -337,8 +339,16 @@ class TestCorruptionFuzz:
         data = b"truncate me " * 400
         frame = encode_zstd_frame(data, block_size=512)
         for cut in range(1, len(frame), 37):
-            with pytest.raises((ValueError, NotImplementedError, IndexError)):
+            with pytest.raises((ValueError, NotImplementedError)):
                 decode_zstd_frame(frame[:-cut])
+
+    def test_short_headers_raise_valueerror(self):
+        with pytest.raises(ValueError, match="header truncated"):
+            decode_zstd_frame(encode_zstd_frame(b"abc")[:4])  # magic alone
+        with pytest.raises(ValueError, match="sequences section is empty"):
+            _decode_sequences(b"", _EntropyCtx())
+        with pytest.raises(ValueError, match="RLE symbol missing"):
+            _decode_sequences(bytes([1, 0b01000000]), _EntropyCtx())
 
 
 class TestSeekable:
