@@ -6,13 +6,22 @@ Mirrors the reference's layer runner + run-summary shape
 (bronze/pipeline.py:70-95,366-426: per-stage outputs, status counts,
 atomic JSON summary) re-expressed Spark-first: each layer is ONE
 declarative write (task-atomic via Spark's commit protocol, partitioned
-by event year so downstream reads partition-prune), and the per-stage
-metrics come from the written data itself, not driver-side accumulation.
+by event year so downstream reads partition-prune), and the next stage
+reads the written layer back with the written frame's schema, so no job
+re-infers it from parquet footers.
+
+Counts ride on the writes instead of extra passes: the silver quality
+totals and the backtest's suppressed-signal counts are
+``DataFrame.observe`` metrics (:class:`~pyspark.sql.Observation`) filled
+by the layer write that already scans those rows; the report's totals
+and by-exit-reason table are one ``rollup`` over the written trades.
+The research profile is a handful of rows, collected once and written
+as parquet plus its CSV twin from that local copy.
 
 Scale notes: every stage is a linear pass; the only shuffles are the
 per-series window (one hash exchange on user_id per layer, reused
 within the layer's window stack) and the layer writes. Nothing is
-collected to the driver except the tiny summary aggregates.
+collected to the driver except the tiny profile and report aggregates.
 """
 
 from __future__ import annotations
@@ -20,7 +29,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pipeline_mf_etl_spark.config import Settings, load_settings
@@ -33,6 +42,9 @@ from pipeline_mf_etl_spark.sources.writers import (
     write_json_artifact,
     write_partitioned,
 )
+
+# backtest_layer's fixed-precedence suppression reasons, in report order
+SUPPRESS_REASONS = ("DOLLAR_VOL", "PRICE_FLOOR", "WARMUP")
 
 # B2-style state mapping (same tiny table as queries/backtest.py).
 _STATE_MAP = (
@@ -90,6 +102,22 @@ def silver_layer(bronze: DataFrame, gap_days: int = 7) -> DataFrame:
     )
 
 
+def observe_quality(silver: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the run summary's quality counts to ``silver``: the write
+    of the returned frame fills the Observation with ``rows_total``,
+    ``rows_valid``, ``total_errors`` and ``total_warns``."""
+    quality = Observation()
+    observed = silver.observe(
+        quality,
+        F.count(F.lit(1)).alias("rows_total"),
+        F.count_if("is_valid_row").alias("rows_valid"),
+        # SUM over no rows is NULL; an empty input still gets a summary
+        F.coalesce(F.sum("quality_error_count"), F.lit(0)).alias("total_errors"),
+        F.coalesce(F.sum("quality_warn_count"), F.lit(0)).alias("total_warns"),
+    )
+    return observed, quality
+
+
 def gold_layer(silver: DataFrame, s: Settings) -> DataFrame:
     """W3 EWM smoothing + S0-S4 flow states + B5 entry signals over the
     valid silver rows."""
@@ -144,20 +172,23 @@ def research_layer(gold: DataFrame) -> DataFrame:
     )
 
 
-def backtest_layer(gold: DataFrame, s: Settings) -> tuple[DataFrame, DataFrame]:
+def backtest_layer(gold: DataFrame, s: Settings) -> tuple[DataFrame, Observation]:
     """B4+B6/B7: execution-realism gating, trade simulation on the
     surviving signals, and summary metrics.
 
     Realism flags mirror the oracle-certified b4 query (price floor /
     warmup / rolling dollar-vol median floor with fixed-precedence
     primary reason, reference backtest/execution_realism.py:208-559);
-    suppressed entry signals are rolled up by reason so the report can
+    suppressed entry signals are counted by reason so the report can
     show WHY candidates were dropped (reference suppression
     diagnostics, execution_realism.py:440-470).
 
-    Returns (trades, suppression_by_reason); callers compute summary
-    metrics with :func:`trade_metrics` over whichever frame they mean
-    (usually the read-back written layer).
+    Returns (trades, suppression). ``suppression`` is an
+    :class:`~pyspark.sql.Observation` on the gated bars holding one
+    count per :data:`SUPPRESS_REASONS` entry; the first action over
+    ``trades`` (the layer write) fills it, so read it only after that.
+    Callers compute summary metrics with :func:`trade_metrics` over
+    whichever frame they mean (usually the read-back written layer).
     """
     from pipeline_mf_etl_spark.operators.windows import rolling_min_samples
 
@@ -188,11 +219,13 @@ def backtest_layer(gold: DataFrame, s: Settings) -> tuple[DataFrame, DataFrame]:
     bars = bars.withColumn("exec_eligible", ~(price_fail | warm_fail | dv_fail)).withColumn(
         "suppress_reason", reason
     )
-    suppression = (
-        bars.filter(F.col("signal") & ~F.col("exec_eligible"))
-        .groupBy("suppress_reason")
-        .agg(F.count("*").alias("n_suppressed"))
-        .orderBy("suppress_reason")
+    suppression = Observation()
+    bars = bars.observe(
+        suppression,
+        *[
+            F.count_if(F.col("signal") & (F.col("suppress_reason") == r)).alias(r)
+            for r in SUPPRESS_REASONS
+        ],
     )
     gated = bars.withColumn("signal", F.col("signal") & F.col("exec_eligible")).select(
         "user_id", "ts", "event_id", "value", "side", "signal"
@@ -206,14 +239,20 @@ def backtest_layer(gold: DataFrame, s: Settings) -> tuple[DataFrame, DataFrame]:
     return trades, suppression
 
 
-def trade_metrics(trades: DataFrame) -> DataFrame:
-    """B7 summary aggregate (one row)."""
-    return trades.agg(
+def trade_metric_columns() -> list[Column]:
+    """B7 summary metrics as aggregate columns: ``n_trades``,
+    ``expectancy``, ``win_rate`` and ``net_std``."""
+    return [
         F.count("*").alias("n_trades"),
         F.round(F.avg("net_return"), 6).alias("expectancy"),
         F.round(F.avg((F.col("net_return") > 0).cast("double")), 6).alias("win_rate"),
         F.round(F.stddev_pop("net_return"), 6).alias("net_std"),
-    )
+    ]
+
+
+def trade_metrics(trades: DataFrame) -> DataFrame:
+    """B7 summary aggregate (one row)."""
+    return trades.agg(*trade_metric_columns())
 
 
 def run_bronze(
@@ -225,24 +264,32 @@ def run_bronze(
     Returns the stage summary (also persisted as JSON)."""
     s = settings or load_settings()
     del s  # bronze has no knobs today; parity with the other stages
-    silver = silver_layer(bronze_layer(load_table(spark, sf_dir, "events")))
+    silver, quality = observe_quality(
+        silver_layer(bronze_layer(load_table(spark, sf_dir, "events")))
+    )
     path = os.path.join(output_root, "bronze")
     write_partitioned(silver, path, ["event_year"])
-    # summary from the WRITTEN layer: reading back costs one pruned scan
-    # instead of re-executing the whole bronze→silver plan
-    silver = _read_layer(spark, path, silver)
-    q = silver.agg(
-        F.count("*").alias("rows_total"),
-        F.coalesce(F.sum(F.col("is_valid_row").cast("long")), F.lit(0)).alias("rows_valid"),
-    ).collect()[0]
+    q = quality.get
     summary = {
         "stage": "bronze",
-        "rows_total": int(q["rows_total"]),
-        "rows_valid": int(q["rows_valid"]),
+        "rows_total": q["rows_total"],
+        "rows_valid": q["rows_valid"],
         "output": path,
     }
     write_json_artifact(summary, os.path.join(output_root, "bronze_summary.json"))
     return summary
+
+
+def write_research(research: DataFrame, path: str) -> int:
+    """Write the research profile as one parquet file plus its CSV twin.
+    The profile is one row per flow state, so it is collected once and
+    both files are written from that local copy instead of running the
+    bronze→gold→profile plan twice. Returns the number of rows."""
+    rows = research.collect()
+    profile = research.sparkSession.createDataFrame(rows, research.schema)
+    profile.coalesce(1).write.mode("overwrite").parquet(path)
+    write_csv_twin(profile, path + "_csv")
+    return len(rows)
 
 
 def run_research(
@@ -252,15 +299,10 @@ def run_research(
     profile + csv twin (reference ``research-cluster-run`` shape)."""
     s = settings or load_settings()
     gold = gold_layer(silver_layer(bronze_layer(load_table(spark, sf_dir, "events"))), s)
-    research = research_layer(gold)
     path = os.path.join(output_root, "research")
-    research.coalesce(1).write.mode("overwrite").parquet(path)
-    write_csv_twin(research, path + "_csv")
     summary = {
         "stage": "research",
-        # count the WRITTEN rows — research.count() would re-run the
-        # whole bronze→gold→profile chain a second time
-        "n_states": _read_layer(spark, path, research).count(),
+        "n_states": write_research(research_layer(gold), path),
         "output": path,
     }
     write_json_artifact(summary, os.path.join(output_root, "research_summary.json"))
@@ -287,29 +329,18 @@ def run_backtest(
     return summary
 
 
-def _promote_doubles(df: DataFrame) -> DataFrame:
-    """float32-stored layers compute in float64 downstream (reference
-    transform/dtypes.py: store float32, compute after .to_numpy() in
-    float64)."""
-    for c, t in df.dtypes:
-        if t == "float":
-            df = df.withColumn(c, F.col(c).cast("double"))
-    return df
-
-
 def _read_layer(spark: SparkSession, path: str, fallback: DataFrame) -> DataFrame:
     """Read a written layer back (partition-pruned downstream reads).
 
-    An EMPTY dataset write leaves only _SUCCESS — no parquet footers to
-    infer a schema from — so fall back to the (equally empty) in-memory
-    frame; the run must still complete and emit its summary artifact.
+    ``fallback`` is the frame that was written, before any downcast; its
+    schema is the read schema. Given a schema, Spark runs no job to
+    infer one from the parquet footers, and an EMPTY layer (only
+    _SUCCESS) reads as an empty frame, so the run still completes. The
+    parquet reader widens columns stored as float32 (silver/gold
+    precision policy) to the schema's double, so the next stage computes
+    in float64.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        return _promote_doubles(spark.read.parquet(path))
-    except AnalysisException:
-        return fallback
+    return spark.read.schema(fallback.schema).parquet(path)
 
 
 def run_pipeline(
@@ -323,6 +354,8 @@ def run_pipeline(
     partitioned parquet under ``output_root``, and persist
     ``run_summary.json`` (atomic temp+rename). Returns the summary dict.
     """
+    from pipeline_mf_etl_spark.reports import build_backtest_report, write_backtest_report
+
     s = settings or load_settings()
     t0 = time.monotonic()
     paths = {
@@ -346,7 +379,8 @@ def run_pipeline(
     write_partitioned(downcast(bronze, s.precision.bronze_float), paths["bronze"], ["event_year"])
     bronze = _read_layer(spark, paths["bronze"], bronze)
 
-    silver = silver_layer(bronze)
+    # the silver write fills the summary's quality counts
+    silver, quality = observe_quality(silver_layer(bronze))
     write_partitioned(downcast(silver, s.precision.silver_float), paths["silver"], ["event_year"])
     silver = _read_layer(spark, paths["silver"], silver)
 
@@ -354,46 +388,30 @@ def run_pipeline(
     write_partitioned(downcast(gold, s.precision.gold_float), paths["gold"], ["event_year"])
     gold = _read_layer(spark, paths["gold"], gold)
 
-    research = research_layer(gold)
-    research.coalesce(1).write.mode("overwrite").parquet(paths["research"])
-    write_csv_twin(research, paths["research"] + "_csv")
+    write_research(research_layer(gold), paths["research"])
 
     trades, suppression = backtest_layer(gold, s)
     trades.write.mode("overwrite").option("compression", "zstd").parquet(paths["trades"])
-    # metrics + report from the WRITTEN layer: one simulation pass total
-    trades = _read_layer(spark, paths["trades"], trades)
-    metric_row = trade_metrics(trades).collect()[0].asDict()
-
     # report twins (json + md) over the WRITTEN trades layer, so the
-    # report describes what is on disk (reference backtest/reports.py)
-    from pipeline_mf_etl_spark.reports import build_backtest_report, write_backtest_report
-
+    # report describes what is on disk (reference backtest/reports.py);
+    # the summary's trade metrics are the report's totals
+    trades = _read_layer(spark, paths["trades"], trades)
     report = build_backtest_report(trades, gold, suppression)
     write_backtest_report(report, output_root)
 
-    # summary aggregates come from the WRITTEN layers (read-back counts),
-    # so the artifact describes what is actually on disk
-    # coalesce: SUM over an empty layer is NULL, and the summary (the
-    # artifact contract) must still be produced for an empty input
-    quality = silver.agg(
-        F.count("*").alias("rows_total"),
-        F.coalesce(F.sum(F.col("is_valid_row").cast("long")), F.lit(0)).alias("rows_valid"),
-        F.coalesce(F.sum(F.col("quality_error_count")), F.lit(0)).alias("total_errors"),
-        F.coalesce(F.sum(F.col("quality_warn_count")), F.lit(0)).alias("total_warns"),
-    ).collect()[0]
-
+    q = quality.get
     summary = {
         "run_id": run_id,
         "sf_dir": sf_dir,
         "duration_sec": round(time.monotonic() - t0, 3),
-        "rows_total": int(quality["rows_total"]),
-        "rows_valid": int(quality["rows_valid"]),
-        "rows_invalid": int(quality["rows_total"] - quality["rows_valid"]),
-        "total_errors": int(quality["total_errors"]),
-        "total_warns": int(quality["total_warns"]),
-        "n_trades": int(metric_row["n_trades"]),
-        "expectancy": metric_row["expectancy"],
-        "win_rate": metric_row["win_rate"],
+        "rows_total": q["rows_total"],
+        "rows_valid": q["rows_valid"],
+        "rows_invalid": q["rows_total"] - q["rows_valid"],
+        "total_errors": q["total_errors"],
+        "total_warns": q["total_warns"],
+        "n_trades": report["n_trades"],
+        "expectancy": report["expectancy"],
+        "win_rate": report["win_rate"],
         "settings": {
             "hold_bars": s.backtest.hold_bars,
             "fee_bps_per_side": s.backtest.fee_bps_per_side,

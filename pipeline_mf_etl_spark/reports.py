@@ -5,55 +5,62 @@ per backtest run (backtest/reports.py, execution_realism_report.py:
 trade totals, profit factor, by-state/by-exit tables, equity max
 drawdown, suppression-by-reason diagnostics). This module derives the
 same report from the engine's layer outputs: every number is a Spark
-aggregate over the trades/bars frames — the driver only collects the
-tiny final tables — and the twins are written through the atomic
-artifact writers (S5).
+aggregate over the written trades layer or a metric observed on the
+bars while the trades write runs — the driver only collects the tiny
+final tables — and the twins are written through the atomic artifact
+writers (S5).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from pipeline_mf_etl_spark.pipeline import trade_metric_columns
 from pipeline_mf_etl_spark.sources.writers import write_json_artifact
 
 
 def build_backtest_report(
-    trades: DataFrame, gold: DataFrame, suppression: DataFrame
+    trades: DataFrame, gold: DataFrame, suppression: Observation
 ) -> dict:
     """Aggregate the written backtest layer into the report dict
     (reference backtest/reports.py fields: totals, PF, by-exit-reason,
-    equity max drawdown, suppression-by-reason)."""
-    wins = F.when(F.col("net_return") > 0, F.col("net_return"))
-    losses = F.when(F.col("net_return") < 0, F.col("net_return"))
-    totals_row = trades.agg(
-        F.count("*").alias("n_trades"),
-        F.round(F.avg("net_return"), 6).alias("expectancy"),
-        F.round(F.avg((F.col("net_return") > 0).cast("double")), 6).alias("win_rate"),
-        F.round(F.stddev_pop("net_return"), 6).alias("net_std"),
-        F.round(F.avg("bars_held"), 3).alias("avg_hold_bars"),
-        F.sum(wins).alias("_gross_win"),
-        F.sum(losses).alias("_gross_loss"),
-    ).collect()[0]
-    gross_win = totals_row["_gross_win"] or 0.0
-    gross_loss = totals_row["_gross_loss"] or 0.0
+    equity max drawdown, suppression-by-reason).
+
+    ``suppression`` is the :class:`~pyspark.sql.Observation` returned by
+    ``pipeline.backtest_layer``; the trades write must have run, since
+    that action is what fills it."""
+    # totals and the by-exit-reason table in one job: the rollup's
+    # grand-total row (grouping = 1) is the totals row. On an empty
+    # layer a rollup returns no rows at all, not even the grand total.
+    rows = (
+        trades.rollup("exit_reason")
+        .agg(
+            F.grouping("exit_reason").alias("_total"),
+            *trade_metric_columns(),
+            F.round(F.avg("bars_held"), 3).alias("avg_hold_bars"),
+            F.sum(F.when(F.col("net_return") > 0, F.col("net_return"))).alias("_gross_win"),
+            F.sum(F.when(F.col("net_return") < 0, F.col("net_return"))).alias("_gross_loss"),
+        )
+        .collect()
+    )
+    totals = next((r.asDict() for r in rows if r["_total"]), {"n_trades": 0})
+    gross_win = totals.get("_gross_win") or 0.0
+    gross_loss = totals.get("_gross_loss") or 0.0
     profit_factor = (
         round(abs(gross_win / gross_loss), 6) if gross_loss != 0 else None
     )
 
-    by_exit = [
-        {
-            "exit_reason": r["exit_reason"],
-            "n": r["n"],
-            "mean_net": r["mean_net"],
-        }
-        for r in trades.groupBy("exit_reason")
-        .agg(F.count("*").alias("n"), F.round(F.avg("net_return"), 6).alias("mean_net"))
-        .orderBy("exit_reason")
-        .collect()
-    ]
+    by_exit = sorted(
+        (
+            {"exit_reason": r["exit_reason"], "n": r["n_trades"], "mean_net": r["expectancy"]}
+            for r in rows
+            if not r["_total"]
+        ),
+        key=lambda d: d["exit_reason"],
+    )
 
     # equity curve: daily mean net return compounded in log space
     # (reference backtest/portfolio.py:33-112) — the curve itself stays
@@ -78,16 +85,17 @@ def build_backtest_report(
     ).collect()[0]
 
     by_reason = [
-        {"reason": r["suppress_reason"], "n_suppressed": r["n_suppressed"]}
-        for r in suppression.collect()
+        {"reason": reason, "n_suppressed": n}
+        for reason, n in sorted(suppression.get.items())
+        if n
     ]
 
     return {
-        "n_trades": int(totals_row["n_trades"]),
-        "expectancy": totals_row["expectancy"],
-        "win_rate": totals_row["win_rate"],
-        "net_std": totals_row["net_std"],
-        "avg_hold_bars": totals_row["avg_hold_bars"],
+        "n_trades": totals["n_trades"],
+        "expectancy": totals.get("expectancy"),
+        "win_rate": totals.get("win_rate"),
+        "net_std": totals.get("net_std"),
+        "avg_hold_bars": totals.get("avg_hold_bars"),
         "profit_factor": profit_factor,
         "max_drawdown": dd_row["max_drawdown"],
         "final_equity": dd_row["final_equity"],

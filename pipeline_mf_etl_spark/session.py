@@ -79,6 +79,15 @@ def get_spark(app_name: str = "pipeline_mf_etl_spark", *, shuffle_partitions: in
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Generated-class cache (static conf, Spark default 100 entries).
+        # One medallion run_pipeline pass uses ~150 generated classes and
+        # one corpus pass (pair export, d7/g1/t12/r1, six decoders) ~290,
+        # so at 100 the LRU evicted every class before its reuse and each
+        # warm pass re-ran Janino on nearly all of them (measured ~140-160
+        # and ~283 compiles per warm pass; most of the pass's CPU went to
+        # the JVM's JIT threads). At 1000 a warm medallion pass compiles
+        # nothing and a warm corpus pass a handful.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
